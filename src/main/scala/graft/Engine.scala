@@ -50,4 +50,27 @@ object Engine {
     attach(spark, dir)
     spark.sql(query)
   }
+
+  /** Cores for a `SPARK_GRAFT_CPUS` setting: its value, else every
+    * processor the JVM sees. */
+  private[graft] def coresFrom(setting: Option[String]): Int =
+    setting.fold(Runtime.getRuntime.availableProcessors)(_.trim.toInt)
+
+  /** The one session factory of the engine's mains (Bench, Verify,
+    * Profile, IndexBuild, ScaleUp, FmpCli): `local[cores]` unless
+    * `master` names another deployment, one shuffle partition per core,
+    * UTC session time, events' TIMESTAMP(NANOS) read as longs, no UI.
+    * Like any `getOrCreate`, it returns a session already active in the
+    * JVM, with these SQL settings applied to it. */
+  def session(appName: String, master: Option[String] = None): SparkSession = {
+    val cores = coresFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+    SparkSession.builder()
+      .master(master.getOrElse(s"local[$cores]"))
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+  }
 }

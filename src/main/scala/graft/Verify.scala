@@ -1,9 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Dumps one query's result to `<outDir>/<name>` as one parquet file.
+    * The previous output is deleted first, so a query that fails — while
+    * it is constructed or while it writes — leaves no stale result for
+    * the oracle compare to pass against. Returns whether it succeeded. */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame): Boolean = {
+    val out = new org.apache.hadoop.fs.Path(outDir, name)
+    out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+    try {
+      fn(spark, sfDir).coalesce(1).write.parquet(out.toString)
+      true
+    } catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      false
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
     val sfDir = args(0)
@@ -11,25 +28,12 @@ object Verify {
     // Optional trailing query names: dump only that subset (iteration aid;
     // the driver always runs the full set).
     val subset = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => subset.isEmpty || subset(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+      .foreach { case (name, fn) => dump(spark, sfDir, outDir, name, fn) }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -20,13 +20,7 @@ import graft.sinks.Sinks
 object FmpCli {
   private def withSession[T](f: SparkSession => T): T = {
     val preExisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-fmp-cli")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("graft-fmp-cli", sys.env.get("SPARK_MASTER"))
     // Only stop a context this invocation created — in-process callers
     // (tests, notebooks) keep theirs.
     try f(spark) finally if (preExisting.isEmpty) spark.stop()

@@ -308,7 +308,7 @@ object Curation {
     * their pair pipeline as standalone registered queries (the driver
     * requires it), but a caller holding the (da, db) pairs — persisted
     * once — pays for pair generation a single time and feeds all three
-    * (see `Profile sharededges` for the measured session saving).
+    * (SCALE.md records the measured session saving).
     * ≡ [[dedupClusters]] when given that query's own pairs
     * (CurationSpec). */
   def dedupClustersFromPairs(pairs: DataFrame): DataFrame =

@@ -495,17 +495,6 @@ object Similarity {
     * against `threshold`. No all-pairs product anywhere — candidate cost
     * is Σ_bucket n_b², i.e. proportional to genuine cluster structure,
     * not to n². */
-  /** Distinct candidate pairs sharing ≥1 band bucket (exposed for the
-    * Profile breakdown). */
-  def lshCandidates(s: SparkSession, dir: String): DataFrame = {
-    val b = bucketed(s, dir)
-    b.as("a").join(b.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"))
-      .distinct()
-  }
-
   def embeddingNearDupsLsh(s: SparkSession, dir: String, threshold: Double = 0.3): DataFrame =
     embeddingNearDupsLshOn(Tables.t(s, dir, "embeddings"), threshold)
 

@@ -4,9 +4,8 @@ import java.nio.file.{Files, Path}
 
 /** Synthetic FMPXMLRESULT generator matching the reference's published
   * benchmark shape: 12,543 records × 126 TEXT fields (BASELINE.md /
-  * reference README.md:71-73). Shared by `Profile fmpbench` and the
-  * driver-run [[graft.Bench]] so the baseline comparison ships in
-  * BENCH_r{N}.json. */
+  * reference README.md:71-73). Used by [[graft.Bench]], whose JSON line
+  * carries the baseline comparison. */
 object FmpFixture {
   val BaselineRows = 12543
   val BaselineFields = 126

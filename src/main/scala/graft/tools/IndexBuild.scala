@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** The index-BUILD stage as a runnable job: force every memoized
   * artifact fit for a corpus snapshot (timed, like Bench's idx_* lines)
   * and export the frame-shaped ones as at-rest parquet + manifest via
@@ -18,14 +16,7 @@ object IndexBuild {
     require(args.length == 2,
       "usage: IndexBuild <corpus snapshot dir> <index output dir>")
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("graft-index-build")
     spark.sparkContext.setLogLevel("WARN")
     try {
       // Force every fit through the same call paths the consumers use

@@ -1,36 +1,24 @@
 package graft.tools
 
+import scala.collection.mutable
+
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
 
-/** Ad-hoc profiling harness: times registered queries (or built-in
-  * experiments) with the noop sink and can print formatted plans.
+/** Ad-hoc profiling harness: times registered queries with the noop sink,
+  * attributes their time to construction, execution and Spark jobs, and
+  * prints formatted plans.
   *
   * Usage:
   *   runMain graft.tools.Profile time <sfDir> <query> [query ...]
+  *   runMain graft.tools.Profile attrib <sfDir> <query> [query ...]
   *   runMain graft.tools.Profile explain <sfDir> <query>
-  *   runMain graft.tools.Profile b23parts <sfDir>
+  *   runMain graft.tools.Profile explaindump <sfDir> <outDir> <query> [query ...]
   */
 object Profile {
-  private def session(): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
-    // A/B experiment hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v".
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .foldLeft(b) { (bb, kv) =>
-        val Array(k, v) = kv.split("=", 2); bb.config(k, v)
-      }
-      .getOrCreate()
-  }
-
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
@@ -40,8 +28,109 @@ object Profile {
     println(f"$name%-32s ${(System.nanoTime() - t0) / 1e9}%.2f s")
   }
 
+  /** One Spark job of an attributed query. `phase` is `construct` (a job
+    * launched while the query function ran) or `exec` (the noop write);
+    * `callSite` is the first engine frame of the job's final stage, else
+    * that stage's short call site. */
+  final case class Job(id: Int, phase: String, callSite: String, seconds: Double,
+      stages: Int, tasks: Int, executorRunS: Double,
+      shuffleReadBytes: Long, shuffleWriteBytes: Long)
+
+  /** Where one query's wall time went: calling the query function
+    * (construction: eager checkpoints, driver fits, schema reads), then
+    * running its plan into the noop sink, and the jobs each launched. */
+  final case class Attribution(query: String, constructS: Double, execS: Double,
+      wallS: Double, jobs: Seq[Job])
+
+  /** Local property carrying the phase onto the jobs it launches. */
+  private val PhaseKey = "graft.profile.phase"
+
+  /** Collects the jobs tagged with [[PhaseKey]]. Listener events arrive on
+    * one bus thread, in the order they were posted; the caller reads the
+    * jobs only after [[awaitEnd]] has seen the sentinel job start, which
+    * was posted after every event of the query's jobs. */
+  private final class JobListener extends SparkListener {
+    final class Acc(val id: Int, val phase: String, val callSite: String, val startMs: Long) {
+      var endMs, runMs, shuffleRead, shuffleWrite = 0L
+      var stages, tasks = 0
+    }
+    private val jobs = mutable.LinkedHashMap.empty[Int, Acc]
+    private val stageJob = mutable.HashMap.empty[Int, Acc]
+    private val ended = new java.util.concurrent.CountDownLatch(1)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(PhaseKey))).foreach {
+        case "end" => ended.countDown()
+        case phase =>
+          val last = e.stageInfos.maxByOption(_.stageId)
+          val site = last.flatMap(_.details.linesIterator.map(_.trim)
+            .find(f => f.startsWith("graft.") && !f.startsWith("graft.tools.Profile")))
+            .orElse(last.map(_.name)).getOrElse("")
+          val acc = new Acc(e.jobId, phase, site, e.time)
+          jobs(e.jobId) = acc
+          e.stageIds.foreach(stageJob.getOrElseUpdate(_, acc))
+      }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      jobs.get(e.jobId).foreach(_.endMs = e.time)
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      stageJob.get(e.stageInfo.stageId).foreach(_.stages += 1)
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      stageJob.get(e.stageId).foreach { a =>
+        a.tasks += 1
+        Option(e.taskMetrics).foreach { m =>
+          a.runMs += m.executorRunTime
+          a.shuffleRead += m.shuffleReadMetrics.totalBytesRead
+          a.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+        }
+      }
+
+    def awaitEnd(): Seq[Job] = {
+      require(ended.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the sentinel job within 60 s")
+      jobs.values.toSeq.map(a => Job(a.id, a.phase, a.callSite, (a.endMs - a.startMs) / 1e3,
+        a.stages, a.tasks, a.runMs / 1e3, a.shuffleRead, a.shuffleWrite))
+    }
+  }
+
+  /** Runs `query` once under a job listener and attributes its time. */
+  def attrib(spark: SparkSession, sfDir: String, query: String): Attribution = {
+    val sc = spark.sparkContext
+    val listener = new JobListener
+    sc.addSparkListener(listener)
+    def phase[T](name: String)(body: => T): (T, Double) = {
+      sc.setLocalProperty(PhaseKey, name)
+      val t0 = System.nanoTime()
+      try (body, (System.nanoTime() - t0) / 1e9)
+      finally sc.setLocalProperty(PhaseKey, null)
+    }
+    try {
+      val t0 = System.nanoTime()
+      val (df, constructS) = phase("construct")(SparkEntry.queries(query)(spark, sfDir))
+      val (_, execS) = phase("exec")(noop(df))
+      val wallS = (System.nanoTime() - t0) / 1e9
+      // Sentinel: a job over zero partitions posts its start event
+      // without running a task, behind every event of the query's jobs.
+      phase("end")(sc.emptyRDD[Int].count())
+      Attribution(query, constructS, execS, wallS, listener.awaitEnd())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def report(a: Attribution): Unit = {
+    println(f"${a.query}  construct ${a.constructS}%.3f s  exec ${a.execS}%.3f s" +
+      f"  wall ${a.wallS}%.3f s  jobs ${a.jobs.size}")
+    println(f"  ${"job"}%5s ${"phase"}%-9s ${"secs"}%7s ${"stages"}%6s ${"tasks"}%6s " +
+      f"${"run_s"}%7s ${"shuf_read_B"}%12s ${"shuf_write_B"}%12s  call site")
+    a.jobs.foreach { j =>
+      println(f"  ${j.id}%5d ${j.phase}%-9s ${j.seconds}%7.3f ${j.stages}%6d ${j.tasks}%6d " +
+        f"${j.executorRunS}%7.3f ${j.shuffleReadBytes}%12d ${j.shuffleWriteBytes}%12d  ${j.callSite}")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val spark = session()
+    val spark = graft.Engine.session("graft-profile")
     spark.sparkContext.setLogLevel("ERROR")
     args.toList match {
       case "time" :: sfDir :: queries =>
@@ -51,690 +140,10 @@ object Profile {
           time(q)(noop(fn(spark, sfDir)))
           time(s"$q (2nd)")(noop(fn(spark, sfDir)))
         }
-      case "aggpush" :: sfDir :: Nil =>
-        // Probe: does parquet aggregate pushdown engage in this build?
-        // (Answer recorded in OPERATORS.md: it does not — the v2 BatchScan
-        // keeps partial_count/partial_min above an empty-projection scan.)
-        spark.conf.set("spark.sql.parquet.aggregatePushDown", "true")
-        spark.conf.set("spark.sql.sources.useV1SourceList", "")
-        val df = spark.read.parquet(s"$sfDir/region.parquet")
-          .agg(expr("count(*)").as("n"), expr("min(r_regionkey)").as("m"))
-        println(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
-      case "x46parts" :: sfDir :: Nil =>
-        // Stage-level cost breakdown of the composed curation pipeline.
-        import graft.pipeline.{Curation, Dedup, Similarity, TextStats}
-        val d = graft.Tables.t(spark, sfDir, "documents")
-        val emb = graft.Tables.t(spark, sfDir, "embeddings")
-        val train = d.filter(col("doc_id") % 97 =!= 0)
-        noop(train)
-        val admitted = train.filter(graft.streaming.IngestGate.cleanCond)
-        val keepIds = admitted.groupBy(sha2(col("text"), 256).as("h"))
-          .agg(min("doc_id").as("doc_id")).select("doc_id")
-        var ded: DataFrame = null
-        time("gate+dedup checkpoint") {
-          ded = admitted.join(keepIds, "doc_id")
-            .select(col("doc_id"), col("text"), col("lang"), col("source"),
-              TextStats.qualityColumn.as("quality"))
-            .localCheckpoint(true)
-        }
-        val lexPairs = Dedup.jaccardPairsPrefixOn(ded, 0.8).select(col("da"), col("db"))
-        time("lex pairs")(noop(lexPairs))
-        var lexKeep: DataFrame = null
-        time("lex propagation+keepBest") {
-          lexKeep = Curation.dedupClustersKeepBy(
-            ded.select(col("doc_id"), col("quality")), lexPairs, col("quality"))
-            .filter(col("keep")).select("doc_id")
-          noop(lexKeep)
-        }
-        val lexSurv = ded.join(lexKeep, Seq("doc_id"))
-        var stripped: DataFrame = null
-        time("strip checkpoint") {
-          stripped = lexSurv
-            .select(col("doc_id"), col("lang"), col("source"), col("quality"))
-            .join(Curation.spanDedupOn(lexSurv, 3, 1, 5), Seq("doc_id"))
-            .localCheckpoint(true)
-        }
-        val ids = stripped.select("doc_id")
-        val semPairs = Similarity.embeddingNearDupsLshOn(emb, 0.3)
-          .join(ids.withColumnRenamed("doc_id", "va"), Seq("va"), "left_semi")
-          .join(ids.withColumnRenamed("doc_id", "vb"), Seq("vb"), "left_semi")
-          .select(col("va").as("da"), col("vb").as("db"))
-        time("sem pairs")(noop(semPairs))
-        time("sem propagation+keepBest") {
-          noop(Curation.dedupClustersKeepBy(
-            stripped.select(col("doc_id"), col("quality")), semPairs, col("quality"))
-            .filter(col("keep")).select("doc_id"))
-        }
-        time("full x46")(noop(SparkEntry.queries("x46_curate_v2")(spark, sfDir)))
-        time("full x46 (2nd)")(noop(SparkEntry.queries("x46_curate_v2")(spark, sfDir)))
-      case "x09parts" :: sfDir :: Nil =>
-        // Where does x09 spend: bucket pipeline, candidate join, or verify?
-        import graft.pipeline.Similarity
-        noop(graft.Tables.t(spark, sfDir, "embeddings"))
-        time("candidates only")(noop(Similarity.lshCandidates(spark, sfDir)))
-        time("full x09")(noop(SparkEntry.queries("x09_embedding_neardup")(spark, sfDir)))
-        time("full x09 (2nd)")(noop(SparkEntry.queries("x09_embedding_neardup")(spark, sfDir)))
-      case "x11parts" :: sfDir :: Nil =>
-        // Where does x11 spend: gram explode, df cap, candidate self-join,
-        // or the array-intersect verify?
-        import graft.pipeline.Dedup
-        val base = graft.Tables.t(spark, sfDir, "documents")
-          .filter(col("doc_id") % 13 === 0 && length(col("text")) >= 3)
-        val grams = array_distinct(transform(
-          sequence(lit(1), length(col("text")) - 2), i => col("text").substr(i, lit(3))))
-        noop(base)
-        time("gram sets only")(noop(base.select(col("doc_id"), grams.as("keys"))))
-        val tok0 = base.select(col("doc_id"), explode(grams).as("gram"))
-        val nd = base.agg(count(lit(1)).as("ndocs"))
-        val capped = tok0.join(tok0.groupBy("gram").agg(count(lit(1)).as("df")), "gram")
-          .crossJoin(broadcast(nd))
-          .filter(col("df") * col("df") <= lit(Dedup.DfCapC.toLong) * col("ndocs"))
-          .select(col("doc_id"), col("gram"))
-        time("capped postings")(noop(capped))
-        val cand = capped.as("a").join(capped.as("b"),
-            col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("da"), col("b.doc_id").as("db")).distinct()
-        time("candidates")(noop(cand))
-        val sets = base.select(col("doc_id"), grams.as("keys"))
-        val joined = cand
-          .join(sets.select(col("doc_id").as("da2"), col("keys").as("ka")), col("da") === col("da2"))
-          .join(sets.select(col("doc_id").as("db2"), col("keys").as("kb")), col("db") === col("db2"))
-        time("verify: intersect 1x, no filter")(noop(
-          joined.select(col("da"), col("db"), size(array_intersect(col("ka"), col("kb"))).as("s"))))
-        time("verify: intersect + jaccard + filter")(noop(
-          joined.select(col("da"), col("db"),
-              (size(array_intersect(col("ka"), col("kb"))).cast("double") /
-                (size(col("ka")) + size(col("kb")) -
-                  size(array_intersect(col("ka"), col("kb"))))).as("j"))
-            .filter(col("j") >= 0.15)))
-        time("full x11")(noop(SparkEntry.queries("x11_ngram_jaccard")(spark, sfDir)))
-        time("full x11 (2nd)")(noop(SparkEntry.queries("x11_ngram_jaccard")(spark, sfDir)))
-      case "x25parts" :: sfDir :: Nil =>
-        // Stage-cost attribution for the composed pipeline: gate, exact
-        // dedup, prefix pairs, component propagation, decontamination.
-        import graft.pipeline.{Curation, Dedup}
-        import graft.streaming.IngestGate
-        val d = graft.Tables.t(spark, sfDir, "documents")
-        val train = d.filter(col("doc_id") % 97 =!= 0)
-        val evalDocs = d.filter(col("doc_id") % 97 === 0)
-        noop(train)
-        time("gate only")(noop(IngestGate.admit(train)))
-        val admitted = IngestGate.admit(train)
-        val keep = admitted.groupBy(sha2(col("text"), 256).as("h"))
-          .agg(min("doc_id").as("doc_id")).select("doc_id")
-        time("gate+dedup")(noop(admitted.join(keep, "doc_id")))
-        val deduped = admitted.join(keep, "doc_id").localCheckpoint(true)
-        time("prefix pairs")(noop(Dedup.jaccardPairsPrefixOn(deduped, 0.8)))
-        time("decontaminate")(noop(Curation.contaminationCounts(deduped, evalDocs)))
-        time("full x25")(noop(SparkEntry.queries("x25_curate_pipeline")(spark, sfDir)))
-        time("full x25 (2nd)")(noop(SparkEntry.queries("x25_curate_pipeline")(spark, sfDir)))
-
-      case "x25bench" :: sfDir :: Nil =>
-        // Reproduce x25 under BENCH conditions: the fresh-JVM profile
-        // (x25parts) reads 8-10 s while BENCH_r04 recorded 19.2 s — the
-        // gap only appears after the full query gauntlet has loaded the
-        // JVM. Run every registered query once (bench order, noop sink),
-        // then stage-attribute x25 twice.
-        import graft.pipeline.{Curation, Dedup}
-        time("gauntlet (all queries once)") {
-          SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
-            if (n != "x25_curate_pipeline") noop(fn(spark, sfDir))
-          }
-        }
-        val d = graft.Tables.t(spark, sfDir, "documents")
-        val train = d.filter(col("doc_id") % 97 =!= 0)
-        val evalDocs = d.filter(col("doc_id") % 97 === 0)
-        (1 to 2).foreach { i =>
-          // Each stage timed on its own — no enclosing timer, so no label
-          // ever reports the sum of its nested stages as one stage.
-          var deduped: org.apache.spark.sql.DataFrame = null
-          time(s"run $i: gate+dedup+checkpoint") {
-            deduped = Curation.gateAndDedup(train)
-          }
-          time(s"run $i: prefix pairs")(noop(Dedup.jaccardPairsPrefixOn(deduped, 0.8)))
-          val pairs = Dedup.jaccardPairsPrefixOn(deduped, 0.8).select(col("da"), col("db"))
-          time(s"run $i: propagation")(
-            noop(Curation.propagateMinLabels(Curation.undirectedEdges(pairs))._1))
-          time(s"run $i: decontaminate")(noop(Curation.contaminationCounts(deduped, evalDocs)))
-          time(s"run $i: full x25")(noop(SparkEntry.queries("x25_curate_pipeline")(spark, sfDir)))
-        }
-
-      case "x46bench" :: sfDir :: Nil =>
-        // Reproduce x46 under BENCH conditions: run every other
-        // registered query once (bench order, noop sink) so the JVM
-        // carries the same code-cache/GC state the driver's bench run
-        // has when it reaches x46, then stage-attribute the chain twice.
-        // Each stage is timed on its own — no enclosing timer, so no
-        // label ever reports the sum of its nested stages as one stage.
-        import graft.pipeline.{Curation, Dedup, Similarity, TextStats}
-        time("gauntlet (all queries once)") {
-          SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
-            if (n != "x46_curate_v2") noop(fn(spark, sfDir))
-          }
-        }
-        val d46 = graft.Tables.t(spark, sfDir, "documents")
-        val emb46 = graft.Tables.t(spark, sfDir, "embeddings")
-        val train46 = d46.filter(col("doc_id") % 97 =!= 0)
-        val eval46 = d46.filter(col("doc_id") % 97 === 0)
-        val evalVecs46 = emb46.filter(col("vec_id") % 97 === 0)
-        (1 to 2).foreach { i =>
-          var ded: DataFrame = null
-          time(s"run $i: 1+2 gate+dedup checkpoint") {
-            ded = train46.filter(graft.streaming.IngestGate.cleanCond)
-              .join(train46.filter(graft.streaming.IngestGate.cleanCond)
-                  .groupBy(sha2(col("text"), 256).as("h"))
-                  .agg(min("doc_id").as("doc_id")).select("doc_id"),
-                "doc_id")
-              .select(col("doc_id"), col("text"), col("lang"), col("source"),
-                TextStats.qualityColumn.as("quality"))
-              .localCheckpoint(true)
-          }
-          val lexPairs = Dedup.jaccardPairsPrefixOn(ded, 0.8).select(col("da"), col("db"))
-          time(s"run $i: 3a lex pairs")(noop(lexPairs))
-          var lexKeep: DataFrame = null
-          time(s"run $i: 3b lex propagation+keepBest") {
-            lexKeep = Curation.dedupClustersKeepBy(
-              ded.select(col("doc_id"), col("quality")), lexPairs, col("quality"))
-              .filter(col("keep")).select("doc_id")
-            noop(lexKeep)
-          }
-          val lexSurv = ded.join(lexKeep, Seq("doc_id"))
-          var stripped: DataFrame = null
-          time(s"run $i: 4 strip checkpoint") {
-            stripped = lexSurv
-              .select(col("doc_id"), col("lang"), col("source"), col("quality"))
-              .join(Curation.spanDedupOn(lexSurv, 3, 1, 5), Seq("doc_id"))
-              .localCheckpoint(true)
-          }
-          val ids = stripped.select("doc_id")
-          val semPairs = Similarity.embeddingNearDupsLshOn(emb46, 0.3)
-            .join(ids.withColumnRenamed("doc_id", "va"), Seq("va"), "left_semi")
-            .join(ids.withColumnRenamed("doc_id", "vb"), Seq("vb"), "left_semi")
-            .select(col("va").as("da"), col("vb").as("db"))
-          time(s"run $i: 5a sem pairs")(noop(semPairs))
-          var semKeep: DataFrame = null
-          time(s"run $i: 5b sem propagation+keepBest") {
-            semKeep = Curation.dedupClustersKeepBy(
-              stripped.select(col("doc_id"), col("quality")), semPairs, col("quality"))
-              .filter(col("keep")).select("doc_id")
-            noop(semKeep)
-          }
-          // The decon tier must not re-run 5b's propagation (the keepBy
-          // loop executes eagerly inside any plan that references it):
-          // materialize the survivor frame under its OWN label so stage
-          // 6 times decon work only and the checkpoint's cost still
-          // appears in the attribution instead of vanishing between
-          // timers.
-          var semSurv: DataFrame = null
-          time(s"run $i: 5c survivor checkpoint") {
-            semSurv = stripped.join(semKeep, Seq("doc_id")).localCheckpoint(true)
-          }
-          time(s"run $i: 6 decon tiers") {
-            noop(Curation.contaminationCounts(
-              semSurv.select(col("doc_id"), col("clean_text").as("text")), eval46, 3))
-            noop(Similarity.semanticDecon(
-              semSurv.select(col("doc_id").as("vec_id")).join(emb46, "vec_id"),
-              evalVecs46, 0.3).filter(col("contaminated")))
-          }
-          time(s"run $i: full x46")(noop(SparkEntry.queries("x46_curate_v2")(spark, sfDir)))
-        }
-
-      case "x46debt" :: sfDir :: Nil =>
-        // Hypothesis probe for the r7/r8 x46 gap: Profile x46bench
-        // (gauntlet ONCE, then x46) reads ~26 s while graft.Bench
-        // (every query TWICE + FMP first) reads ~51 s for the same
-        // plan. If the delta is allocator/GC/block-manager debt from
-        // the doubled gauntlet, an explicit collection should restore
-        // the 26 s figure within the same JVM; if it is plan cost, it
-        // won't move.
-        time("gauntlet pass 1") {
-          SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
-            if (n != "x46_curate_v2") noop(fn(spark, sfDir))
-          }
-        }
-        time("gauntlet pass 2") {
-          SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
-            if (n != "x46_curate_v2") noop(fn(spark, sfDir))
-          }
-        }
-        time("x46 after 2x gauntlet, run 1")(noop(SparkEntry.queries("x46_curate_v2")(spark, sfDir)))
-        time("x46 after 2x gauntlet, run 2")(noop(SparkEntry.queries("x46_curate_v2")(spark, sfDir)))
-        System.gc(); Thread.sleep(2000); System.gc()
-        time("x46 after explicit gc, run 1")(noop(SparkEntry.queries("x46_curate_v2")(spark, sfDir)))
-        time("x46 after explicit gc, run 2")(noop(SparkEntry.queries("x46_curate_v2")(spark, sfDir)))
-
-      case "sharededges" :: sfDir :: Nil =>
-        // Session-level pair-graph sharing: x16 and x27 rebuild the SAME
-        // %29-slice pair pipeline as standalone registered queries (the
-        // driver requires each to stand alone); a library session holding
-        // the pairs persisted once feeds both. Measures the saving.
-        import graft.pipeline.{Curation, Dedup}
-        noop(graft.Tables.t(spark, sfDir, "documents"))
-        time("x16 standalone")(noop(SparkEntry.queries("x16_dedup_clusters")(spark, sfDir)))
-        time("x27 standalone")(noop(SparkEntry.queries("x27_leakage_safe_split")(spark, sfDir)))
-        val pairs = Dedup.jaccardPairs(spark, sfDir).select(col("da"), col("db")).persist()
-        time("shared: pairs once")(pairs.count(): Unit)
-        val base = graft.Tables.t(spark, sfDir, "documents")
-          .filter(col("doc_id") % 29 === 0)
-        time("shared: x16 from pairs")(noop(Curation.dedupClustersFromPairs(pairs)))
-        time("shared: x27 from pairs")(noop(Curation.leakageSafeSplitFromPairs(base, pairs)))
-        pairs.unpersist()
-
-      case "prefparts" :: sfDir :: Nil =>
-        // Warm stage attribution INSIDE jaccardPairsPrefixOn + the
-        // propagation loop, on the x46 ded corpus (the shape x46/x25/
-        // idx_x46b_lex_index all pay). Two iterations; read the 2nd
-        // (JIT-warm) numbers.
-        import graft.pipeline.{Curation, Dedup, TextStats}
-        import org.apache.spark.sql.expressions.Window
-        val d = graft.Tables.t(spark, sfDir, "documents")
-        val train = d.filter(col("doc_id") % 97 =!= 0)
-        val admitted = train.filter(graft.streaming.IngestGate.cleanCond)
-        val keepIds = admitted.groupBy(sha2(col("text"), 256).as("h"))
-          .agg(min("doc_id").as("doc_id")).select("doc_id")
-        val ded = admitted.join(keepIds, "doc_id")
-          .select(col("doc_id"), col("text"), col("lang"), col("source"),
-            TextStats.qualityColumn.as("quality"))
-          .localCheckpoint(true)
-        println(s"ded rows: ${ded.count()}")
-        val key = array_distinct(split(col("text"), " "))
-        val tBp = 8000L
-        (1 to 2).foreach { i =>
-          val tok0 = ded.select(col("doc_id"), explode(key).as("tok"))
-          time(s"run $i: explode only")(noop(tok0))
-          val dfTbl = tok0.groupBy("tok").agg(count(lit(1)).as("df"))
-          time(s"run $i: df table")(noop(dfTbl))
-          val perDoc = Window.partitionBy("doc_id")
-          val ranked = tok0.join(dfTbl, "tok")
-            .withColumn("pos", row_number().over(perDoc.orderBy(col("df"), col("tok"))))
-            .withColumn("n", count(lit(1)).over(perDoc))
-          val ceilTn = floor((lit(tBp) * col("n") + lit(9999)) / lit(10000))
-          val pre = ranked.filter(col("pos") <= col("n") - ceilTn + 1)
-            .select(col("doc_id"), col("tok"), col("n"))
-          time(s"run $i: prefix postings (join+window)")(noop(pre))
-          val lenCond = col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id") &&
-            lit(tBp) * col("a.n") <= lit(10000) * col("b.n") &&
-            lit(tBp) * col("b.n") <= lit(10000) * col("a.n")
-          val posCond = (lit(1) + least(col("a.n") - col("a.pos"), col("b.n") - col("b.pos"))) *
-            lit(10000 + tBp) >= lit(tBp) * (col("a.n") + col("b.n"))
-          val preP = ranked.filter(col("pos") <= col("n") - ceilTn + 1)
-            .select(col("doc_id"), col("tok"), col("n"), col("pos"))
-          if (i == 1) {
-            println(s"raw join rows (len only): " +
-              preP.as("a").join(preP.as("b"), lenCond).count())
-            println(s"raw join rows (len+pos): " +
-              preP.as("a").join(preP.as("b"), lenCond && posCond).count())
-          }
-          val cand = preP.as("a").join(preP.as("b"), lenCond)
-            .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-            .distinct()
-          time(s"run $i: candidates len-only")(noop(cand))
-          val candP = preP.as("a").join(preP.as("b"), lenCond && posCond)
-            .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-            .distinct()
-          time(s"run $i: candidates len+pos")(noop(candP))
-          val pairs = Dedup.jaccardPairsPrefixOn(ded, 0.8, ordered = false)
-            .select(col("da"), col("db"))
-          time(s"run $i: full pairs (verify incl.)")(noop(pairs))
-          val pairsCk = pairs.localCheckpoint(true)
-          println(s"run $i: pair rows: ${pairsCk.count()}")
-          var labels: DataFrame = null
-          time(s"run $i: propagation") {
-            val (l, rounds) = Curation.propagateMinLabels(
-              Curation.undirectedEdges(pairsCk))
-            labels = l
-            println(s"  rounds: $rounds")
-          }
-          time(s"run $i: keepBest window") {
-            noop(Curation.dedupClustersKeepByLabels(
-              ded.select(col("doc_id"), col("quality")), labels, col("quality"))
-              .filter(col("keep")).select("doc_id"))
-          }
-        }
-
-      case "propvar" :: sfDir :: Nil =>
-        // Propagation-round shape experiment on the x46 lex pair graph:
-        // current round shape (labels LEFT-joined to edges then to labels
-        // again — the big side reshuffled twice per round, never
-        // broadcastable because labels is the left-outer's left side) vs
-        // the nbr-table shape (edges INNER-join labels on dst, aggregate
-        // min per src — AQE can broadcast the small labels side, so the
-        // cached edge frame never shuffles).
-        import graft.pipeline.{Curation, Dedup, TextStats}
-        val d = graft.Tables.t(spark, sfDir, "documents")
-        val train = d.filter(col("doc_id") % 97 =!= 0)
-        val admitted = train.filter(graft.streaming.IngestGate.cleanCond)
-        val keepIds = admitted.groupBy(sha2(col("text"), 256).as("h"))
-          .agg(min("doc_id").as("doc_id")).select("doc_id")
-        val ded = admitted.join(keepIds, "doc_id")
-          .select(col("doc_id"), col("text"), TextStats.qualityColumn.as("quality"))
-          .localCheckpoint(true)
-        val pairs = Dedup.jaccardPairsPrefixOn(ded, 0.8, ordered = false)
-          .select(col("da"), col("db")).localCheckpoint(true)
-        println(s"pairs: ${pairs.count()}")
-        val edges = Curation.undirectedEdges(pairs)
-        (1 to 2).foreach { i =>
-          time(s"run $i: current propagateMinLabels") {
-            val (l, r) = Curation.propagateMinLabels(edges)
-            noop(l); println(s"  rounds: $r")
-          }
-          time(s"run $i: nbr-table variant") {
-            val e = edges.persist()
-            var labels = e.select(col("src").as("node")).distinct()
-              .withColumn("lbl", col("node")).persist()
-            var converged = false
-            var rounds = 0
-            while (!converged && rounds < 100) {
-              val nbr = e.join(labels.select(col("node").as("dstn"), col("lbl").as("nbr_lbl")),
-                  col("dst") === col("dstn"))
-                .groupBy("src").agg(min("nbr_lbl").as("nbr_lbl"))
-              val merged = labels.join(nbr, col("node") === col("src"), "left")
-                .select(col("node"),
-                  least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"),
-                  col("lbl").as("old"))
-              val short = merged.select(col("node").as("p"), col("lbl").as("plbl"))
-              val next = merged.join(short, col("lbl") === col("p"), "left")
-                .select(col("node"),
-                  least(col("lbl"), coalesce(col("plbl"), col("lbl"))).as("lbl"), col("old"))
-                .localCheckpoint(true)
-              val changed = next.filter(col("lbl") =!= col("old")).count()
-              labels.unpersist()
-              labels = next.select("node", "lbl").persist()
-              converged = changed == 0
-              rounds += 1
-            }
-            noop(labels); println(s"  rounds: $rounds")
-            labels.unpersist(); e.unpersist()
-          }
-        }
-
-      case "verifyvar" :: sfDir :: Nil =>
-        // Verify-stage experiment: current string-array SetJaccard vs
-        // explicit-broadcast sets vs dense-int dictionary arrays.
-        import graft.pipeline.{Dedup, TextStats}
-        import org.apache.spark.sql.expressions.Window
-        graft.functions.GraftFunctions.register(spark)
-        val d = graft.Tables.t(spark, sfDir, "documents")
-        val train = d.filter(col("doc_id") % 97 =!= 0)
-        val admitted = train.filter(graft.streaming.IngestGate.cleanCond)
-        val keepIds = admitted.groupBy(sha2(col("text"), 256).as("h"))
-          .agg(min("doc_id").as("doc_id")).select("doc_id")
-        val ded = admitted.join(keepIds, "doc_id")
-          .select(col("doc_id"), col("text")).localCheckpoint(true)
-        val key = array_distinct(split(col("text"), " "))
-        val tBp = 8000L
-        val tok0 = ded.select(col("doc_id"), explode(key).as("tok"))
-        val dfTbl = tok0.groupBy("tok").agg(count(lit(1)).as("df"))
-        val perDoc = Window.partitionBy("doc_id")
-        val ranked = tok0.join(dfTbl, "tok")
-          .withColumn("pos", row_number().over(perDoc.orderBy(col("df"), col("tok"))))
-          .withColumn("n", count(lit(1)).over(perDoc))
-        val ceilTn = floor((lit(tBp) * col("n") + lit(9999)) / lit(10000))
-        val pre = ranked.filter(col("pos") <= col("n") - ceilTn + 1)
-          .select(col("doc_id"), col("tok"), col("n"))
-        val cand = pre.as("a").join(pre.as("b"),
-            col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id") &&
-              lit(tBp) * col("a.n") <= lit(10000) * col("b.n") &&
-              lit(tBp) * col("b.n") <= lit(10000) * col("a.n"))
-          .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-          .distinct().localCheckpoint(true)
-        println(s"candidates: ${cand.count()}")
-        val sets = ded.select(col("doc_id"), array_sort(key).as("keys"))
-        val raw = call_function("set_jaccard", col("ka"), col("kb"))
-        def verifyWith(s1: DataFrame, s2: DataFrame): DataFrame = cand
-          .join(s1.select(col("doc_id").as("da2"), col("keys").as("ka")), col("da") === col("da2"))
-          .join(s2.select(col("doc_id").as("db2"), col("keys").as("kb")), col("db") === col("db2"))
-          .filter(raw >= 0.8)
-          .select(col("da"), col("db"), round(raw, 4).as("jaccard"))
-        (1 to 2).foreach { i =>
-          time(s"run $i: verify current")(noop(verifyWith(sets, sets)))
-          time(s"run $i: verify broadcast sets")(noop(verifyWith(broadcast(sets), broadcast(sets))))
-          val setsCk = sets.localCheckpoint(true)
-          time(s"run $i: verify checkpointed sets")(noop(verifyWith(setsCk, setsCk)))
-        }
-
-      case "clfparts" :: sfDir :: Nil =>
-        // Where does the idx_clf_weights build spend: the gopher label,
-        // the token explode + hash, the 512-bucket agg, or the collect?
-        import graft.pipeline.Selection
-        graft.functions.GraftFunctions.register(spark)
-        val corpus = graft.Tables.t(spark, sfDir, "documents")
-        noop(corpus)
-        (1 to 2).foreach { i =>
-          time(s"run $i: gopher label only")(noop(
-            corpus.select(col("doc_id"), Selection.gopherPassColumn.as("g"))))
-          time(s"run $i: explode+hash only")(noop(
-            corpus.select(explode(split(coalesce(col("text"), lit("")), " ")).as("tok"))
-              .select((call_function("token_hash", col("tok")) % 512).as("b"))))
-          time(s"run $i: label+explode+hash+agg")(noop(
-            corpus.select(when(Selection.gopherPassColumn, 1L).otherwise(0L).as("good"),
-                explode(split(coalesce(col("text"), lit("")), " ")).as("tok"))
-              .select(col("good"), (call_function("token_hash", col("tok")) % 512).as("b"))
-              .groupBy("b")
-              .agg(sum(col("good")).as("cg"), sum(lit(1L) - col("good")).as("cb"))))
-          graft.pipeline.Ivf.clearModelCache()
-          time(s"run $i: full classifierFitQuality construct") {
-            Selection.classifierFitQuality(spark, sfDir)
-          }
-          time(s"run $i: fitted inference noop") {
-            noop(Selection.classifierFitQuality(spark, sfDir))
-          }
-        }
-
-      case "clfplan" :: sfDir :: Nil =>
-        import graft.pipeline.Selection
-        graft.functions.GraftFunctions.register(spark)
-        val corpus = graft.Tables.t(spark, sfDir, "documents")
-        println(corpus.select(when(Selection.gopherPassColumn, 1L).otherwise(0L).as("good"),
-            explode(split(coalesce(col("text"), lit("")), " ")).as("tok"))
-          .select(col("good"), (call_function("token_hash", col("tok")) % 512).as("b"))
-          .groupBy("b")
-          .agg(sum(col("good")).as("cg"), sum(lit(1L) - col("good")).as("cb"))
-          .queryExecution.explainString(ExplainMode.fromString("formatted")))
-
-      case "x11idx" :: sfDir :: Nil =>
-        // idx_x11_postings build attribution: gram explode, repartition,
-        // partitioned write, stats write.
-        import graft.pipeline.PartitionKeys
-        val base = graft.Tables.t(spark, sfDir, "documents")
-          .filter(col("doc_id") % 13 === 0 && length(col("text")) >= 3)
-        noop(base)
-        val grams = array_distinct(transform(
-          sequence(lit(1), length(col("text")) - 2), i => col("text").substr(i, lit(3))))
-        (1 to 2).foreach { i =>
-          val exploded = base.select(col("doc_id"), explode(grams).as("gram"))
-            .withColumn("gramh", PartitionKeys.encode(col("gram")))
-          time(s"run $i: explode+encode")(noop(exploded))
-          time(s"run $i: +repartition")(noop(exploded.repartition(col("gramh"))))
-          time(s"run $i: partitioned write") {
-            exploded.repartition(col("gramh"))
-              .write.mode("overwrite").partitionBy("gramh")
-              .parquet(s"/tmp/x11idx_probe_$i/postings")
-          }
-          time(s"run $i: flat write (no partitionBy)") {
-            exploded.repartition(col("gramh"))
-              .write.mode("overwrite").parquet(s"/tmp/x11idx_probe_flat_$i/postings")
-          }
-          time(s"run $i: stats write") {
-            base.agg(count(lit(1)).as("ndocs"))
-              .write.mode("overwrite").parquet(s"/tmp/x11idx_probe_$i/stats")
-          }
-        }
-
-      case "mediaparts" :: sfDir :: Nil =>
-        // x115b attribution: decode+hash, checkpoint, band pairs,
-        // propagation, cluster window.
-        import graft.pipeline.{Curation, Multimodal}
-        import org.apache.spark.sql.expressions.Window
-        val docsDf = graft.Tables.t(spark, sfDir, "documents")
-        noop(docsDf)
-        (1 to 2).foreach { i =>
-          val hashes = Multimodal.imagePhashes(Multimodal.imagesFromDocuments(docsDf))
-          time(s"run $i: decode+hash noop")(noop(hashes))
-          var ph: DataFrame = null
-          time(s"run $i: checkpoint") {
-            ph = graft.pipeline.Checkpoints.stable(hashes.filter(col("phash").isNotNull))
-          }
-          val pairs = Multimodal.hashBandPairsOf(ph)
-            .select(col("ma").as("da"), col("mb").as("db"))
-          time(s"run $i: band pairs")(noop(pairs))
-          var labels: DataFrame = null
-          time(s"run $i: propagation") {
-            val (l, r) = Curation.propagateMinLabels(Curation.undirectedEdges(pairs))
-            labels = l
-            println(s"  rounds: $r")
-          }
-          time(s"run $i: cluster window + sort") {
-            noop(ph.select(col("media_id"))
-              .join(labels.select(col("node").as("media_id"), col("lbl").as("cid")),
-                Seq("media_id"), "left")
-              .withColumn("cluster_id", coalesce(col("cid"), col("media_id")))
-              .withColumn("cluster_size",
-                count(lit(1)).over(Window.partitionBy("cluster_id")))
-              .select("media_id", "cluster_id", "cluster_size")
-              .orderBy("media_id"))
-          }
-          time(s"run $i: full x115b")(noop(
-            SparkEntry.queries("x115b_image_phash_clusters")(spark, sfDir)))
-        }
-
-      case "x58parts" :: sfDir :: Nil =>
-        // Coverage battery attribution: per-n explode vs fused multi-n
-        // explode, window, distinct+join, assembly.
-        import org.apache.spark.sql.expressions.Window
-        val b58 = graft.Tables.t(spark, sfDir, "documents")
-          .select(col("doc_id"), length(col("text")).cast("long").as("n_char"),
-            split(col("text"), " ").as("t"))
-        noop(b58)
-        (1 to 2).foreach { i =>
-          def gramsN(n: Int) = b58.filter(size(col("t")) >= n)
-            .select(col("doc_id"), explode(transform(
-              sequence(lit(0), (size(col("t")) - n).cast("int")),
-              j => struct(j.as("pos"), concat_ws(" ", slice(col("t"), j + 1, lit(n))).as("g"))))
-              .as("pg"))
-            .select(col("doc_id"), col("pg.pos").as("pos"), col("pg.g").as("g"))
-          time(s"run $i: 6 per-n explodes") {
-            (5 to 10).foreach(n => noop(gramsN(n)))
-          }
-          val multi = b58.filter(size(col("t")) >= 5)
-            .select(col("doc_id"), explode(flatten(transform(
-              sequence(lit(5), least(lit(10), size(col("t")))),
-              n => transform(
-                sequence(lit(0), (size(col("t")) - n).cast("int")),
-                j => struct(n.cast("int").as("n"), j.as("pos"),
-                  concat_ws(" ", slice(col("t"), j + 1, n)).as("g"))))))
-              .as("png"))
-            .select(col("doc_id"), col("png.n").as("n"), col("png.pos").as("pos"),
-              col("png.g").as("g"))
-          time(s"run $i: fused multi-n explode")(noop(multi))
-          time(s"run $i: 6 per-n windows") {
-            (5 to 10).foreach { n =>
-              noop(gramsN(n)
-                .withColumn("c", count(lit(1)).over(Window.partitionBy("doc_id", "g")))
-                .filter(col("c") > 1))
-            }
-          }
-          time(s"run $i: fused window")(noop(
-            multi.withColumn("c",
-              count(lit(1)).over(Window.partitionBy("doc_id", "n", "g")))
-              .filter(col("c") > 1)))
-          time(s"run $i: full x58b")(noop(SparkEntry.queries("x58b_dup_ngram_coverage")(spark, sfDir)))
-        }
-
-      case "x39parts" :: sfDir :: Nil =>
-        // x39/x30 attribution: span construction, map-only dedup, sort.
-        val d39 = graft.Tables.t(spark, sfDir, "documents")
-        noop(d39)
-        val t39 = split(col("text"), " ")
-        val spans = when(col("text").isNull, lit(null).cast("array<string>"))
-          .otherwise(transform(
-            sequence(lit(0), floor((size(t39) - 1).cast("long") / lit(3L)).cast("int")),
-            i => concat_ws(" ", slice(t39, i * 3 + 1, lit(3)))))
-        (1 to 2).foreach { i =>
-          time(s"run $i: spans projection only")(noop(
-            d39.select(col("doc_id"), spans.as("sp"))))
-          val kept = array_distinct(spans)
-          val mapOnly = d39.select(col("doc_id"),
-            size(spans).cast("long").as("n_lines"),
-            size(kept).cast("long").as("n_kept"),
-            coalesce(array_join(kept, " "), lit("")).as("clean_text"))
-          time(s"run $i: map-only dedup, no sort")(noop(mapOnly))
-          time(s"run $i: map-only dedup + orderBy")(noop(mapOnly.orderBy("doc_id")))
-          time(s"run $i: checkpointed + orderBy") {
-            noop(graft.pipeline.Checkpoints.stable(mapOnly).orderBy("doc_id"))
-          }
-          time(s"run $i: full x39")(noop(SparkEntry.queries("x39_intradoc_dedup")(spark, sfDir)))
-          time(s"run $i: full x30")(noop(SparkEntry.queries("x30_line_dedup")(spark, sfDir)))
-        }
-
-      case "setgroups" :: sfDir :: Nil =>
-        // How much does the x46 ded corpus compress under token-SET
-        // identity? Docs with identical distinct-token sets have
-        // identical Jaccard against everything, so pair generation can
-        // run over one representative per set-group and expand after.
-        import graft.pipeline.TextStats
-        val d = graft.Tables.t(spark, sfDir, "documents")
-        val train = d.filter(col("doc_id") % 97 =!= 0)
-        val admitted = train.filter(graft.streaming.IngestGate.cleanCond)
-        val keepIds = admitted.groupBy(sha2(col("text"), 256).as("h"))
-          .agg(min("doc_id").as("doc_id")).select("doc_id")
-        val ded = admitted.join(keepIds, "doc_id")
-          .select(col("doc_id"), col("text")).localCheckpoint(true)
-        val key = array_sort(array_distinct(split(col("text"), " ")))
-        val groups = ded.select(col("doc_id"), key.as("k"))
-          .groupBy("k").agg(count(lit(1)).as("g"), min("doc_id").as("rep"))
-          .localCheckpoint(true)
-        println(s"ded docs: ${ded.count()}")
-        println(s"set-groups: ${groups.count()}")
-        println("group-size histogram:")
-        groups.groupBy("g").agg(count(lit(1)).as("n_groups"))
-          .orderBy(col("g").desc).show(20, false)
-        // candidate-join mass proxy: sum over groups of pairs inside
-        println(s"intra-group pair mass: " +
-          groups.agg(sum(expr("g * (g - 1) div 2"))).head.get(0))
-      case "x46bprop" :: sfDir :: Nil =>
-        // Why did the 2M driver-edge budget help x46 but hurt x46b/x46c?
-        // Reconstruct the x46b lex union graph and time propagateMinLabels
-        // at each budget.
-        import graft.pipeline.{Curation, Dedup}
-        val d = graft.Tables.t(spark, sfDir, "documents")
-        val corpus = d.filter(col("doc_id") % 97 =!= 0)
-        val newDocs = corpus.filter(pmod(col("doc_id"), lit(10)) === 1)
-        val oldDed = Curation.x46bOldDed(spark, sfDir)
-        val oldLex = Curation.x46bLexIndex(spark, sfDir)
-        val admittedNew = newDocs.filter(graft.streaming.IngestGate.cleanCond)
-        val newMin = admittedNew.groupBy(sha2(col("text"), 256).as("sha"))
-          .agg(min("doc_id").as("new_id"))
-        val j = newMin.join(oldDed.select(col("sha"), col("doc_id").as("old_id")),
-          Seq("sha"), "left")
-        val newWin = j.filter(col("old_id").isNull || col("new_id") < col("old_id"))
-          .select(col("new_id").as("doc_id"))
-        val dedNew = admittedNew.join(newWin, Seq("doc_id"))
-          .select(col("doc_id"), col("text")).localCheckpoint(true)
-        val newNew = Dedup.jaccardPairsPrefixOn(dedNew, 0.8, ordered = false)
-          .select(col("da"), col("db"))
-        val cross = Dedup.crossNearDupPairs(dedNew,
-          oldDed.select(col("doc_id"), col("text")), 0.8)
-          .select(col("da"), col("db"))
-        val star = oldLex.filter(col("node") =!= col("lbl"))
-          .select(col("node").as("da"), col("lbl").as("db"))
-        var lexDelta: DataFrame = null
-        time("delta pairs checkpoint") {
-          lexDelta = newNew.union(cross).localCheckpoint(true)
-        }
-        println(s"delta pairs: ${lexDelta.count()}, star: ${star.count()}")
-        val edges = Curation.undirectedEdges(lexDelta.union(star))
-        (1 to 2).foreach { i =>
-          time(s"run $i: propagate budget=2M") {
-            noop(Curation.propagateMinLabels(edges)._1)
-          }
-          time(s"run $i: propagate budget=200k") {
-            noop(Curation.propagateMinLabels(edges, driverEdgeBudget = 200000L)._1)
-          }
-          time(s"run $i: propagate budget=0 (distributed)") {
-            noop(Curation.propagateMinLabels(edges, driverEdgeBudget = 0L)._1)
-          }
-        }
+      case "attrib" :: sfDir :: queries =>
+        // Name a query twice to see its warm second run.
+        noop(graft.Tables.t(spark, sfDir, "region")) // warmup
+        queries.foreach(q => report(attrib(spark, sfDir, q)))
       case "explaindump" :: sfDir :: outDir :: queries =>
         // Dump formatted plans for several queries to <outDir>/<q>.txt —
         // the plans/r19 evidence trail (one JVM for the whole batch).
@@ -749,62 +158,6 @@ object Profile {
       case "explain" :: sfDir :: q :: Nil =>
         println(SparkEntry.queries(q)(spark, sfDir).queryExecution
           .explainString(ExplainMode.fromString("formatted")))
-      case "b23parts" :: sfDir :: Nil =>
-        val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        noop(li.select(col("l_orderkey")))
-        // the one source of truth for the exact-decimal money contract
-        val netDec = graft.queries.Relational.netDec
-        val chargeDec = graft.queries.Relational.chargeDec
-        time("scan only")(noop(li))
-        time("double math")(noop(li.select(col("l_orderkey"),
-          round(col("l_extendedprice") * (lit(1) - col("l_discount")), 2).as("net"))))
-        time("decimal net+charge")(noop(li.select(col("l_orderkey"),
-          round(netDec, 2).cast("double").as("net"),
-          round(chargeDec, 2).cast("double").as("charge"))))
-        time("transcendental only")(noop(li.select(col("l_orderkey"),
-          round(log(col("l_extendedprice")), 6).as("ln"),
-          round(sqrt(col("l_quantity")), 6).as("sq"),
-          round(pow(col("l_quantity"), 2), 2).as("q2"))))
-        time("sort only")(noop(li
-          .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_discount", "l_tax")))
-        time("full b23")(noop(SparkEntry.queries("b23_math_funcs")(spark, sfDir)))
-      case "fmpbench" :: Nil =>
-        // Reference comparison point: the reference's only published number
-        // is ~5,234 records/s parsing 12,543 records × 126 fields
-        // (README.md:71-73, single thread). Same workload shape here.
-        val f = FmpFixture.write()
-        val nRows = FmpFixture.BaselineRows
-        try {
-          // warm-up then timed parse (iterator drain == the reference's
-          // `print` loop shape: pure parse throughput, no Spark job)
-          (1 to 2).foreach { _ =>
-            val it = new graft.fmp.FmpReader.FmpRowIterator(
-              graft.fmp.FmpReader.open(f))
-            var n = 0
-            val t0 = System.nanoTime()
-            while (it.hasNext) { it.next(); n += 1 }
-            val secs = (System.nanoTime() - t0) / 1e9
-            it.close()
-            println(f"parsed $n records x 126 fields in $secs%.2f s = ${n / secs}%.0f records/s")
-          }
-          // default read() == the executor-side V2 scan; noop sink so all
-          // 126 columns materialize (count() would prune the scan to
-          // nothing and inflate the number vs the baseline's full parse)
-          (1 to 2).foreach { _ =>
-            val t1 = System.nanoTime()
-            noop(graft.fmp.FmpReader.read(spark, f.toString))
-            val secs1 = (System.nanoTime() - t1) / 1e9
-            println(f"default read() [V2] ->noop: $nRows rows in $secs1%.2f s = ${nRows / secs1}%.0f records/s")
-          }
-          // contrast: the schema-rich driver-parallelize path (readWithSchema)
-          (1 to 2).foreach { _ =>
-            val t2 = System.nanoTime()
-            noop(graft.fmp.FmpReader.readWithSchema(spark, f.toString)._1)
-            val secs2 = (System.nanoTime() - t2) / 1e9
-            println(f"readWithSchema (driver-parallelize) ->noop: $nRows rows in $secs2%.2f s = ${nRows / secs2}%.0f records/s")
-          }
-        } finally FmpFixture.delete(f)
-
       case other =>
         System.err.println(s"Unknown args: $other")
         sys.exit(2)

@@ -90,13 +90,7 @@ object ScaleUp {
     require(args.length == 3, "usage: ScaleUp <srcDir> <outDir> <k>")
     val Array(srcDir, outDir, kArg) = args
     val k = kArg.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("graft-scale-up")
     spark.sparkContext.setLogLevel("WARN")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>

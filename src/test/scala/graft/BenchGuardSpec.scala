@@ -2,155 +2,52 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The cross-round bench drift guard's parser — pinned against the
-  * artifact shapes it must read: the driver's BENCH_r*.json wrapper
-  * (JSON-escaped, front-clipped tail) and Bench's own raw line. The r6
-  * verdict's x16 phantom (2.30 → 5.70 s on byte-identical source) is
-  * the failure class this guard exists for; a parser regression would
-  * silently disable it again. */
+/** Bench's in-run timing rule: min of two runs, a third only on a >3×
+  * disagreement, failures never winning the min, and failed lines kept
+  * out of the headline total but counted. */
 class BenchGuardSpec extends AnyFunSuite {
 
-  private val wrapperTail =
-    """{"n": 6, "rc": 0, "sf": 0.1,
-       "tail": "30_lang_stats\":0.273,\"b30b_term_freq\":0.354,\"x16_dedup_clusters\":5.703,\"fmp_recs_per_sec\":26108,\"fmp_ok\":true,\"sf\":\"/root/testdata/sf0.1\"}"}"""
-
-  test("parses JSON-escaped wrapper tails, skipping clipped and non-query fields") {
-    val m = Bench.parsePriorTimes(wrapperTail, "/root/testdata/sf0.1")
-    assert(m("b30b_term_freq") == 0.354)
-    assert(m("x16_dedup_clusters") == 5.703)
-    // The front-clipped pair parses under a mangled name that can never
-    // match a registered query — present but harmless.
-    assert(m.contains("30_lang_stats") && !m.contains("b30_lang_stats"))
-    // Integer-valued fields (fmp_recs_per_sec) and the headline "value"
-    // must not be mistaken for query times.
-    assert(!m.contains("fmp_recs_per_sec") && !m.contains("value"))
+  /** A run function replaying scripted outcomes, counting its calls. */
+  private final class Script(outcomes: Option[Double]*) {
+    private val it = outcomes.iterator
+    var calls = 0
+    val run: () => Option[Double] = () => { calls += 1; it.next() }
   }
 
-  test("returns empty for a different scale factor (local iteration vs driver artifact)") {
-    assert(Bench.parsePriorTimes(wrapperTail, "/root/testdata/sf0.001").isEmpty)
+  test("a third run happens only when the two timings differ by more than 3x") {
+    val close = new Script(Some(1.0), Some(2.9))
+    assert(Bench.timeLine("close", close.run) == 1.0)
+    assert(close.calls == 2)
+    val exact = new Script(Some(1.0), Some(3.0))
+    assert(Bench.timeLine("exact", exact.run) == 1.0)
+    assert(exact.calls == 2, "exactly 3x is not more than 3x")
+    val apart = new Script(Some(4.0), Some(1.0), Some(0.5))
+    assert(Bench.timeLine("apart", apart.run) == 0.5)
+    assert(apart.calls == 3)
+    val spike = new Script(Some(9.0), Some(2.0), Some(5.0))
+    assert(Bench.timeLine("spike", spike.run) == 2.0, "the third run only joins the min")
   }
 
-  test("parses a raw (unescaped) bench line too") {
-    val raw = """{"metric":"total","value":104.885,"unit":"sec","failed":0,"queries":{"b05_select_rename_cast":0.452,"x25_curate_pipeline":8.270},"sf":"/root/testdata/sf0.1"}"""
-    val m = Bench.parsePriorTimes(raw, "/root/testdata/sf0.1")
-    assert(m == Map("b05_select_rename_cast" -> 0.452, "x25_curate_pipeline" -> 8.27))
+  test("a failed run never wins the minimum") {
+    assert(Bench.best(Seq(None, Some(2.5))) == 2.5)
+    assert(Bench.best(Seq(Some(7.0), None, Some(3.0))) == 3.0)
+    // One failure leaves one timing: no >3x comparison, so no third run.
+    val oneFails = new Script(None, Some(4.0))
+    assert(Bench.timeLine("one_fails", oneFails.run) == 4.0)
+    assert(oneFails.calls == 2)
   }
 
-  test("the r10 artifact seeds the graph/repetition/PQ families for the r11 guard") {
-    // The r10 additions (x58 battery, PQ-ADC, graph centrality) must be
-    // drift-guarded from their FIRST follow-up round — a clipped tail
-    // that dropped them would silently disable the guard exactly where
-    // the code is newest.
-    val p = java.nio.file.Paths.get("BENCH_r10.json")
-    assume(java.nio.file.Files.exists(p), "driver artifact present in repo root")
-    val m = Bench.parsePriorTimes(java.nio.file.Files.readString(p), "/root/testdata/sf0.1")
-    val want = Map(
-      "x58_repetition_battery" -> 1.490, "x58b_dup_ngram_coverage" -> 2.793,
-      "x58c_repetition_gate" -> 3.677, "x59_ann_pq_adc" -> 0.394,
-      "x59b_ann_ivfadc" -> 0.405, "x60_graph_pagerank" -> 1.997,
-      "x60b_pagerank_keep_best" -> 3.201, "x61_triangle_stats" -> 0.895,
-      "x62_kcore_membership" -> 1.771, "x63_harmonic_centrality" -> 1.039)
-    want.foreach { case (q, t) =>
-      assert(m.get(q).contains(t), s"$q: expected $t, got ${m.get(q)}")
-    }
+  test("a line that fails every run reports -1, stays out of total, and counts as failed") {
+    val allFail = new Script(None, None)
+    assert(Bench.timeLine("all_fail", allFail.run) == -1.0)
+    assert(Bench.best(Seq(None, None)) == -1.0)
+    val (total, failed) = Bench.totals(Seq("a" -> 1.5, "all_fail" -> -1.0, "b" -> 0.25))
+    assert(total == 1.75)
+    assert(failed == 1)
   }
 
-  test("drift decision: flags a genuine 2x move above the stage floor, ignores noise") {
-    // Failing case the guard exists for: x58c at its r10 prior (3.677 s,
-    // above the 2 s floor -> tight 2.0x) must flag an 8 s reading...
-    assert(Bench.drifted(8.0, 3.677))
-    // ...but not a 5 s one (under 2x), and sub-floor priors never flag.
-    assert(!Bench.drifted(5.0, 3.677))
-    assert(!Bench.drifted(1.0, 0.15), "sub-0.2 s priors are scheduler noise")
-    // The 2.5x loose band for small-but-real queries: 0.25 s prior flags
-    // only past 0.625 s.
-    assert(!Bench.drifted(0.62, 0.25))
-    assert(Bench.drifted(0.63, 0.25))
-  }
-
-  test("the r11 artifact seeds the x42-band guard; quiet ground truth would have flagged it") {
-    // r11's load phantom (the fourth in four rounds): x42b/x42c/x43
-    // read 2.3-6.6x their quiet values in the driver window on
-    // byte-identical source. The artifact must stay parseable so the
-    // in-run guard sees these priors...
-    val p = java.nio.file.Paths.get("BENCH_r11.json")
-    assume(java.nio.file.Files.exists(p), "driver artifact present in repo root")
-    val m = Bench.parsePriorTimes(java.nio.file.Files.readString(p), "/root/testdata/sf0.1")
-    val want = Map(
-      "x42_winnow_fingerprints" -> 0.901, "x42b_fingerprint_pairs" -> 4.140,
-      "x42c_confirmed_copies" -> 12.088, "x43_semantic_keep_best" -> 7.665)
-    want.foreach { case (q, t) =>
-      assert(m.get(q).contains(t), s"$q: expected $t, got ${m.get(q)}")
-    }
-    // ...and the drift decision, fed the committed quiet min-of-3 ground
-    // truth (SCALE.md round-12 table) as prior, must flag each phantom
-    // reading — proof the guard catches this class when priors are real.
-    assert(Bench.drifted(12.088, 2.372), "x42c phantom vs quiet prior")
-    assert(!Bench.drifted(7.665, 4.235),
-      "x43's 1.8x stays under the 2.0x threshold by design (jitter head-room)")
-    assert(!Bench.drifted(2.372, 2.372) && !Bench.drifted(4.235, 4.235),
-      "quiet-vs-quiet never flags")
-  }
-
-  test("the r12 x26/x30/x34 spike: quiet ground truth would have flagged each phantom") {
-    // r12's driver artifact read x26 14.772 s / x30 12.353 s / x34
-    // 11.410 s on byte-identical plans; quiet min-of-3 at sf0.1
-    // (SCALE.md round-13 notes, measured steady-state behind the idx_*
-    // builds) reproduces 1.143 / 3.513 / 2.314 s — the r7-r10 bands.
-    // Fed the quiet values as priors, the guard flags every phantom;
-    // quiet-vs-quiet never flags. These are the committed seeds the
-    // full-map prior file carries forward.
-    assert(Bench.drifted(14.772, 1.143), "x26 phantom vs quiet prior")
-    assert(Bench.drifted(12.353, 3.513), "x30 phantom vs quiet prior")
-    assert(Bench.drifted(11.410, 2.314), "x34 phantom vs quiet prior")
-    Seq(1.143, 3.513, 2.314).foreach(q =>
-      assert(!Bench.drifted(q, q), "quiet-vs-quiet never flags"))
-  }
-
-  test("full-map priors cover the whole registered suite (r12 ask: no clipped blind spots)") {
-    // r12 finding: BENCH_r*.json tails are front-clipped to ~64 of 213
-    // queries, so the drift guard was blind on 70% of the suite — the
-    // x26/x30/x34 spike arrived exactly through that gap. The committed
-    // sf-scoped full map (written by Bench each full run) must carry a
-    // prior for EVERY query registered last round; only queries NEW this
-    // round are allowed to miss.
-    val p = java.nio.file.Paths.get("bench_full_sf0.1.json")
-    assume(java.nio.file.Files.exists(p), "full-map artifact present in repo root")
-    val m = Bench.parsePriorTimes(java.nio.file.Files.readString(p), "/root/testdata/sf0.1")
-    // Registered queries with no prior expected: added AFTER the full
-    // map was last written. Update when registering a query; the next
-    // full bench run re-empties it.
-    val newThisRound = Set("x141b_containment_dispatch", "x140b_media_cap_recall")
-    val idx = m.keySet.filter(_.startsWith("idx_"))
-    val missing = SparkEntry.queries.keySet -- m.keySet -- newThisRound
-    assert(missing.isEmpty,
-      s"registered queries with NO cross-round prior (drift guard blind): $missing")
-    assert(m.size - idx.size >= SparkEntry.queries.size - newThisRound.size,
-      s"full map (${m.size - idx.size} non-idx priors) thinner than the suite " +
-        s"(${SparkEntry.queries.size} registered - ${newThisRound.size} new)")
-    // The alphabetical head — the exact region the clipped tails lost.
-    assert(m.contains("b05_select_rename_cast"), "head of the suite must be covered")
-  }
-
-  test("probe fields never pollute the prior map; probeMs measures real work") {
-    // The probe values are whole-ms integers precisely so the query-time
-    // regex (\d+\.\d+) can never read them as priors.
-    val line = """{"metric":"total","value":9.123,"unit":"sec","failed":0,
-      "queries":{"b05_select_rename_cast":0.123},"fmp_recs_per_sec":27000,
-      "fmp_ok":true,"probe_ms":{"start":103,"post_idx":98,"end":2041},
-      "sf":"/root/testdata/sf0.1"}"""
-    val m = Bench.parsePriorTimes(line, "/root/testdata/sf0.1")
-    assert(m == Map("b05_select_rename_cast" -> 0.123), s"got $m")
+  test("probeMs measures real work") {
     val p = Bench.probeMs()
     assert(p > 1.0 && p < 60000.0, s"probe out of sane range: $p ms")
-  }
-
-  test("the actual BENCH_r06.json artifact yields prior times for the guard") {
-    val p = java.nio.file.Paths.get("BENCH_r06.json")
-    assume(java.nio.file.Files.exists(p), "driver artifact present in repo root")
-    val m = Bench.parsePriorTimes(java.nio.file.Files.readString(p), "/root/testdata/sf0.1")
-    assert(m.size > 40, s"expected a broad per-query map, got ${m.size}")
-    assert(m.get("x16_dedup_clusters").contains(5.703),
-      s"the r6 phantom the guard exists for must be readable: ${m.get("x16_dedup_clusters")}")
   }
 }

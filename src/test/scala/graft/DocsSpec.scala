@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * and oracle-bearing query counts; two rounds running those numbers went
   * stale the moment a query landed after the doc edit. Deriving the check
   * from `SparkEntry` makes the doc physically unable to drift: any new
-  * QueryDef fails this spec until the preamble is updated. */
+  * QueryDef fails this spec until the preamble is updated. The same
+  * holds for the one session factory: a new `SparkSession.builder` in
+  * main code fails here. */
 class DocsSpec extends AnyFunSuite {
 
   private val operatorsMd = {
@@ -41,5 +43,22 @@ class DocsSpec extends AnyFunSuite {
   test("every oracle-bearing query name is registered (no orphan oracle SQL)") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")
+  }
+
+  test("main code builds sessions only through Engine.session") {
+    // Comment lines do not count: a usage example in scaladoc is fine.
+    def builds(src: String): Boolean = src.linesIterator.map(_.trim)
+      .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+      .exists(_.contains("SparkSession.builder"))
+    val stream = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val builders =
+      try {
+        import scala.jdk.CollectionConverters._
+        stream.iterator().asScala.filter(_.toString.endsWith(".scala"))
+          .filter(p => builds(java.nio.file.Files.readString(p)))
+          .map(_.toString).toSeq
+      } finally stream.close()
+    assert(builders == Seq("src/main/scala/graft/Engine.scala"),
+      s"SparkSession.builder outside the Engine.session factory: $builders")
   }
 }
