@@ -41,14 +41,25 @@ object FmpCli {
     * keeping the per-batch Spark job overhead negligible. */
   private[fmp] val JsonBatchRows = 10000
 
-  /** Driver-side adapter over the shared [[graft.fmp.v2.FmpProgress]]
-    * plumbing so the single-pass `print` emits the identical progress and
-    * summary lines as the executor-side V2 readers. */
-  private final class DriverProgress(val path: String, val progressEvery: Long)
-      extends graft.fmp.v2.FmpProgress {
-    def record(): Unit = recordProduced()
-    def finish(): Unit = reportFinal()
-    def count: Long = nRecords
+  /** `print`'s progress lines: one every [[ProgressEvery]] records plus a
+    * final rec/s summary (the tqdm analogue of the reference's `print`,
+    * _cli.py:56-68). */
+  private final class Progress(fileName: String) {
+    private val startNanos = System.nanoTime()
+    var count = 0L
+
+    private def recPerSec: Long = {
+      val secs = (System.nanoTime() - startNanos) / 1e9
+      if (secs > 0) (count / secs).toLong else 0L
+    }
+
+    def record(): Unit = {
+      count += 1
+      if (count % ProgressEvery == 0)
+        println(s"[fmp] $fileName: $count records ($recPerSec rec/s)")
+    }
+
+    def finish(): Unit = println(s"[fmp] $fileName: parsed $count records ($recPerSec rec/s)")
   }
 
   def main(args: Array[String]): Unit = args.toList match {
@@ -63,16 +74,14 @@ object FmpCli {
     case "print" :: file :: Nil =>
       // ONE stream, ONE decompression: header counts line, then the same
       // constant-memory StAX iterator continues over the rows with the
-      // shared progress-line format (the reference's tqdm analogue,
-      // _cli.py:56-68 — also a single pass). A count of one
-      // non-splittable document gains nothing from a Spark job; the V2
-      // source's `progressEvery` option remains the executor-side
-      // progress surface for distributed reads.
+      // progress lines (the reference's tqdm analogue, _cli.py:56-68 —
+      // also a single pass). A count of one non-splittable document gains
+      // nothing from a Spark job, so the driver counts.
       val resolved = FmpReader.resolvePath(file)
       val it = new FmpReader.FmpRowIterator(FmpReader.open(resolved))
       try {
         println(s"Parsing ${it.schema.foundCount} records from ${it.schema.name}")
-        val progress = new DriverProgress(resolved.toString, ProgressEvery)
+        val progress = new Progress(resolved.getFileName.toString)
         while (it.hasNext) { it.next(); progress.record() }
         progress.finish()
         println(s"Materialized ${progress.count} records")

@@ -6,14 +6,15 @@ import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
+import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
 import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, DataType, Metadata, MetadataBuilder, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MetadataBuilder, StringType, StructField, StructType}
 import org.slf4j.LoggerFactory
 
 import graft.etl.Sanitize
+import graft.sinks.Sinks
 
 /** One `<FIELD EMPTYOK= MAXREPEAT= NAME= TYPE=>` header entry
   * (fmp_reader.py:37-42). */
@@ -48,24 +49,28 @@ final case class FmpSchema(
   * which infers the schema from the `<METADATA>` header on the driver and
   * runs the constant-memory StAX pull parse inside executor tasks (unlike
   * the reference, which retains the whole lxml element tree —
-  * SURVEY.md §4.1). [[readWithSchema]] keeps the driver-side parse for
-  * callers that need the `FmpSchema` record counts with the data.
+  * SURVEY.md §4.1). [[readWithSchemaAndSha]] keeps the driver-side parse
+  * for callers that need the `FmpSchema` record counts with the data.
   */
 object FmpReader {
   private val log = LoggerFactory.getLogger(getClass)
+
+  /** The `*.bz2` snapshots in `dir`, sorted by file name (oldest
+    * first); a directory without one is an error. */
+  private[fmp] def snapshots(dir: Path): Seq[Path] = {
+    val listing = Files.list(dir)
+    val snaps = try listing.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".bz2")).toSeq.sortBy(_.getFileName.toString)
+    finally listing.close()
+    require(snaps.nonEmpty, s"No *.bz2 snapshots in directory $dir")
+    snaps
+  }
 
   /** Directory input → lexicographically last `*.bz2` (latest snapshot,
     * _cli.py:26-28); plain files pass through. */
   def resolvePath(path: String): Path = {
     val p = Paths.get(path)
-    if (Files.isDirectory(p)) {
-      val listing = Files.list(p)
-      val snaps = try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".bz2")).toSeq.sortBy(_.getFileName.toString)
-      finally listing.close()
-      require(snaps.nonEmpty, s"No *.bz2 snapshots in directory $path")
-      snaps.last
-    } else p
+    if (Files.isDirectory(p)) snapshots(p).last else p
   }
 
   /** Test seam: every [[open]] call increments this — a CLI command's
@@ -88,10 +93,27 @@ object FmpReader {
     f.createXMLStreamReader(in)
   }
 
+  // A header attribute the parse depends on that is missing or not a
+  // number fails naming its element and attribute (and the bad value).
+  private def requiredAttr(r: XMLStreamReader, element: String, attr: String): String = {
+    val v = r.getAttributeValue(null, attr)
+    if (v == null) throw new IllegalArgumentException(s"<$element> has no $attr attribute")
+    v
+  }
+
+  private def numberAttr[T](r: XMLStreamReader, element: String,
+      attr: String, parse: String => T): T = {
+    val v = requiredAttr(r, element, attr)
+    try parse(v) catch {
+      case _: NumberFormatException =>
+        throw new IllegalArgumentException(s"""<$element $attr="$v"> is not a number""")
+    }
+  }
+
   /** Advance `r` through the FMPXMLRESULT header and stop just after the
     * `<RESULTSET>` open tag. Shared by the schema-only path and the row
     * iterator so warnings and validation live in exactly one place. */
-  private def parseHeader(r: javax.xml.stream.XMLStreamReader,
+  private def parseHeader(r: XMLStreamReader,
       headerStrategy: Seq[String] => Seq[String],
       warnRepeating: Boolean = true): FmpSchema = {
     var dbName = ""
@@ -100,7 +122,7 @@ object FmpReader {
     while (r.hasNext) {
       r.next() match {
         case XMLStreamConstants.START_ELEMENT if r.getLocalName == "RESULTSET" =>
-          val found = r.getAttributeValue(null, "FOUND").toLong
+          val found = numberAttr(r, "RESULTSET", "FOUND", _.toLong)
           if (found != dbRecords)
             log.warn(s"Number of records in header ($dbRecords) does not match " +
               s"number of records in result set ($found). " +
@@ -111,13 +133,13 @@ object FmpReader {
           return FmpSchema(dbName, fields.toSeq, clean, found, dbRecords)
         case XMLStreamConstants.START_ELEMENT if r.getLocalName == "DATABASE" =>
           dbName = r.getAttributeValue(null, "NAME")
-          dbRecords = r.getAttributeValue(null, "RECORDS").toLong
+          dbRecords = numberAttr(r, "DATABASE", "RECORDS", _.toLong)
         case XMLStreamConstants.START_ELEMENT if r.getLocalName == "FIELD" =>
           val f = FmpField(
-            name = r.getAttributeValue(null, "NAME"),
+            name = requiredAttr(r, "FIELD", "NAME"),
             fieldType = r.getAttributeValue(null, "TYPE"),
             emptyOk = r.getAttributeValue(null, "EMPTYOK") == "YES",
-            maxRepeat = r.getAttributeValue(null, "MAXREPEAT").toInt)
+            maxRepeat = numberAttr(r, "FIELD", "MAXREPEAT", _.toInt))
           // The reference silently assumes one <DATA> per column: it
           // appends EVERY <DATA> text to the record (fmp_reader.py:116-117)
           // and a repeating column therefore misaligns/overflows the row
@@ -150,28 +172,49 @@ object FmpReader {
 
   /** Pull-based row iterator over an FMPXMLRESULT stream: parses the
     * header eagerly (schema available immediately), then yields one
-    * `Array[String]` per `<ROW>` on demand — the shape both the driver
-    * reader and the DataSource V2 executor-side reader consume. Constant
-    * memory; close() releases the underlying stream. */
+    * `Array[String]` per `<ROW>` on demand — every `<DATA>` text in
+    * document order (`<DATA/>` → null), the positional view both the
+    * driver reader and the DataSource V2 reader consume. Constant memory;
+    * close() releases the underlying stream.
+    *
+    * The same pass records each `<COL>` boundary, so the row just returned
+    * by next() also reads as one `<DATA>` list per `<COL>`: column `c`
+    * holds the cells `[colStart(c), colEnd(c))` (an empty `<COL>` is an
+    * empty range). That is the `repeatingAsArray` view, in which a
+    * MAXREPEAT>1 column arrives as a real repeated value instead of
+    * misaligning the positional row — capability the reference lacks (it
+    * appends every `<DATA>` flat, fmp_reader.py:116-117, and a repeating
+    * row overflows its namedtuple). Callers that take that view pass
+    * `repeatingAsArray = true`, which silences the positional-mode
+    * MAXREPEAT warning. The boundaries stay valid until the next
+    * hasNext/next call. */
   final class FmpRowIterator(in: InputStream,
-      headerStrategy: Seq[String] => Seq[String] = Sanitize.defaultHeaderStrategy)
+      headerStrategy: Seq[String] => Seq[String] = Sanitize.defaultHeaderStrategy,
+      repeatingAsArray: Boolean = false)
       extends Iterator[Array[String]] with AutoCloseable {
     private val r = newStreamReader(in)
-    val schema: FmpSchema = parseHeader(r, headerStrategy)
+    val schema: FmpSchema = parseHeader(r, headerStrategy, warnRepeating = !repeatingAsArray)
 
     private val current = ArrayBuffer.empty[String]
+    private var colEnds = new Array[Int](math.max(1, schema.fields.size))
+    private var nCols = 0
     private var pending: Array[String] = null
     private var inData = false
     private var sawText = false
     private val text = new StringBuilder
     private var exhausted = false
 
+    /** `<COL>` count of the row last returned by next(). */
+    def colCount: Int = nCols
+    def colStart(c: Int): Int = if (c == 0) 0 else colEnds(c - 1)
+    def colEnd(c: Int): Int = colEnds(c)
+
     private def advance(): Unit = {
       while (pending == null && !exhausted && r.hasNext) {
         r.next() match {
           case XMLStreamConstants.START_ELEMENT =>
             r.getLocalName match {
-              case "ROW" => current.clear()
+              case "ROW" => current.clear(); nCols = 0
               case "DATA" => inData = true; sawText = false; text.clear()
               case _ =>
             }
@@ -183,6 +226,10 @@ object FmpReader {
               case "DATA" =>
                 current += (if (sawText) text.toString else null)
                 inData = false
+              case "COL" =>
+                if (nCols == colEnds.length) colEnds = java.util.Arrays.copyOf(colEnds, nCols * 2)
+                colEnds(nCols) = current.size
+                nCols += 1
               case "ROW" =>
                 pending = current.toArray
                 current.clear()
@@ -203,82 +250,6 @@ object FmpReader {
     override def close(): Unit = { r.close(); in.close() }
   }
 
-  /** COL-grouping variant of [[FmpRowIterator]] for `repeatingAsArray`
-    * ingestion: yields one `Array[Array[String]]` per `<ROW>` — one entry
-    * per `<COL>`, holding that column's `<DATA>` texts in document order
-    * (`<DATA/>` → null element; an empty `<COL>` → empty array). A
-    * MAXREPEAT>1 column thus arrives as a real repeated value instead of
-    * misaligning the positional row — capability the reference lacks (it
-    * appends every `<DATA>` flat, fmp_reader.py:116-117, and a repeating
-    * row overflows its namedtuple). Same constant-memory StAX pull shape
-    * as the positional iterator. */
-  final class FmpColRowIterator(in: InputStream,
-      headerStrategy: Seq[String] => Seq[String] = Sanitize.defaultHeaderStrategy)
-      extends Iterator[Array[Array[String]]] with AutoCloseable {
-    private val r = newStreamReader(in)
-    val schema: FmpSchema = parseHeader(r, headerStrategy, warnRepeating = false)
-
-    private val cells = ArrayBuffer.empty[Array[String]]
-    private val colBuf = ArrayBuffer.empty[String]
-    private var pending: Array[Array[String]] = null
-    private var inData = false
-    private var sawText = false
-    private val text = new StringBuilder
-    private var exhausted = false
-
-    private def advance(): Unit = {
-      while (pending == null && !exhausted && r.hasNext) {
-        r.next() match {
-          case XMLStreamConstants.START_ELEMENT =>
-            r.getLocalName match {
-              case "ROW" => cells.clear()
-              case "COL" => colBuf.clear()
-              case "DATA" => inData = true; sawText = false; text.clear()
-              case _ =>
-            }
-          case XMLStreamConstants.CHARACTERS | XMLStreamConstants.CDATA if inData =>
-            text.appendAll(r.getTextCharacters, r.getTextStart, r.getTextLength)
-            sawText = true
-          case XMLStreamConstants.END_ELEMENT =>
-            r.getLocalName match {
-              case "DATA" =>
-                colBuf += (if (sawText) text.toString else null)
-                inData = false
-              case "COL" =>
-                cells += colBuf.toArray
-                colBuf.clear()
-              case "ROW" =>
-                pending = cells.toArray
-                cells.clear()
-              case "RESULTSET" => exhausted = true
-              case _ =>
-            }
-          case _ =>
-        }
-      }
-      if (!r.hasNext) exhausted = true
-    }
-
-    override def hasNext: Boolean = { if (pending == null) advance(); pending != null }
-    override def next(): Array[Array[String]] = {
-      if (!hasNext) throw new NoSuchElementException
-      val out = pending; pending = null; out
-    }
-    override def close(): Unit = { r.close(); in.close() }
-  }
-
-  /** Full streaming parse: header + all rows (`<DATA>` texts appended
-    * positionally per row, fmp_reader.py:108-120). Constant memory —
-    * rows are handed to `sink` as they complete. */
-  def parseRows(in: InputStream,
-      headerStrategy: Seq[String] => Seq[String],
-      sink: Array[String] => Unit): FmpSchema = {
-    val it = new FmpRowIterator(in, headerStrategy)
-    while (it.hasNext) sink(it.next())
-    it.schema
-  }
-
-
   /** Spark StructType for an FMP schema: all-nullable strings (reference
     * semantics §2C.1), original header name carried as `comment` metadata
     * (the SQL column comment at sql.py:31-34). With `repeatingAsArray`,
@@ -291,22 +262,6 @@ object FmpReader {
       StructField(clean, dt, nullable = true,
         metadata = new MetadataBuilder().putString("comment", field.name).build())
     })
-
-  /** Read an FMPXMLRESULT export (file, `.bz2`, or snapshot directory)
-    * into a DataFrame. Returns the schema (with counts) alongside. */
-  def readWithSchema(spark: SparkSession, path: String,
-      headerStrategy: Seq[String] => Seq[String] = Sanitize.defaultHeaderStrategy,
-      numPartitions: Int = 0): (DataFrame, FmpSchema) = {
-    val p = resolvePath(path)
-    val rows = ArrayBuffer.empty[Row]
-    val in = open(p)
-    val schema = try parseRows(in, headerStrategy, arr => rows += Row.fromSeq(arr.toSeq))
-    finally in.close()
-    val struct = toStructType(schema)
-    val parts = if (numPartitions > 0) numPartitions
-      else math.max(1, math.min(spark.sparkContext.defaultParallelism, rows.size / 1000 + 1))
-    (spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, parts), struct), schema)
-  }
 
   /** Single-pass driver read for bulk-load flows (`create_db`): ONE
     * decompression yields the rows, the `FmpSchema` counts, AND the
@@ -323,17 +278,13 @@ object FmpReader {
   def readWithSchemaAndSha(spark: SparkSession, path: String,
       headerStrategy: Seq[String] => Seq[String] = Sanitize.defaultHeaderStrategy)
       : (DataFrame, FmpSchema, String) = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val in = new java.security.DigestInputStream(open(resolvePath(path)), md)
+    val in = Sinks.sha256Tap(open(resolvePath(path)))
     val rows = ArrayBuffer.empty[Row]
     val it = new FmpRowIterator(in, headerStrategy)
-    val schema = try {
+    val (schema, sha) = try {
       while (it.hasNext) rows += Row.fromSeq(it.next().toSeq)
-      val drain = new Array[Byte](8192)
-      while (in.read(drain) != -1) {}
-      it.schema
+      (it.schema, Sinks.drainSha256(in))
     } finally it.close()
-    val sha = md.digest().map("%02x".format(_)).mkString
     val struct = toStructType(schema)
     val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism, rows.size / 1000 + 1))
     (spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, parts), struct),
@@ -343,8 +294,8 @@ object FmpReader {
   /** Default read path: the DataSource V2 `format("fmp")` source, which
     * parses rows INSIDE executor tasks (the driver touches only the
     * `<METADATA>` header for schema inference). The driver-parallelize
-    * [[readWithSchema]] remains for callers that need the `FmpSchema`
-    * counts alongside the data. */
+    * [[readWithSchemaAndSha]] remains for callers that need the
+    * `FmpSchema` counts and the content hash alongside the data. */
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.format("fmp").load(path)
 

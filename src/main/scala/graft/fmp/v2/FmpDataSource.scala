@@ -1,5 +1,6 @@
 package graft.fmp.v2
 
+import java.nio.file.{Files, Paths}
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -29,7 +30,7 @@ import graft.fmp.FmpReader
   *  - row parsing happens INSIDE the executor task with the same
   *    constant-memory StAX pull iterator — the document never materializes
   *    on the driver (this IS the default [[FmpReader.read]] path; the
-  *    driver-parallelize form survives only in `readWithSchema`);
+  *    driver-parallelize form survives only in `readWithSchemaAndSha`);
   *  - one InputPartition per document: bz2 + single-XML-document inputs
   *    are not byte-splittable, so the file is the unit of parallelism —
   *    a directory of exports scans as one task per snapshot;
@@ -68,14 +69,12 @@ class FmpTable(tableSchema: StructType, path: String) extends Table with Support
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new FmpScanBuilder(tableSchema, path, options.getBoolean("allSnapshots", false),
-      options.getLong("progressEvery", 0L),
       options.getBoolean("repeatingAsArray", false),
       options.getBoolean("trustHeaderCount", true))
 }
 
 class FmpScanBuilder(fullSchema: StructType, path: String, allSnapshots: Boolean,
-    progressEvery: Long, repeatingAsArray: Boolean,
-    trustHeaderCount: Boolean = true)
+    repeatingAsArray: Boolean, trustHeaderCount: Boolean)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownAggregates {
   private var required: StructType = fullSchema
@@ -130,8 +129,7 @@ class FmpScanBuilder(fullSchema: StructType, path: String, allSnapshots: Boolean
 
   override def build(): Scan =
     if (countPushed) new FmpCountScan(path, allSnapshots)
-    else new FmpScan(fullSchema, required, path, allSnapshots, progressEvery,
-      repeatingAsArray, pushed)
+    else new FmpScan(fullSchema, required, path, allSnapshots, repeatingAsArray, pushed)
 }
 
 /** Pushed-filter support and evaluation for the FMP scan. The value side
@@ -190,8 +188,7 @@ object FmpFilters {
 }
 
 class FmpScan(fullSchema: StructType, required: StructType, path: String,
-    allSnapshots: Boolean, progressEvery: Long, repeatingAsArray: Boolean,
-    pushed: Array[Filter] = Array.empty)
+    allSnapshots: Boolean, repeatingAsArray: Boolean, pushed: Array[Filter])
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -207,8 +204,7 @@ class FmpScan(fullSchema: StructType, required: StructType, path: String,
     FmpPartitions.plan(path, allSnapshots)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FmpPartitionReaderFactory(fullSchema.fieldNames, required, progressEvery,
-      repeatingAsArray, pushed)
+    new FmpPartitionReaderFactory(fullSchema.fieldNames, required, repeatingAsArray, pushed)
 }
 
 object FmpPartitions {
@@ -220,19 +216,11 @@ object FmpPartitions {
     * name in the reader (snapshot schema evolution by name). Shared by
     * the row scan and the pushed-COUNT scan. */
   def plan(path: String, allSnapshots: Boolean): Array[InputPartition] = {
-    val p = java.nio.file.Paths.get(path)
-    if (allSnapshots && java.nio.file.Files.isDirectory(p)) {
-      import scala.jdk.CollectionConverters._
-      val listing = java.nio.file.Files.list(p)
-      val snaps = try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".bz2"))
-        .toSeq.sortBy(_.getFileName.toString)
-      finally listing.close()
-      require(snaps.nonEmpty, s"No *.bz2 snapshots in directory $path")
-      snaps.map(f => FmpInputPartition(f.toString)).toArray
-    } else {
-      Array(FmpInputPartition(FmpReader.resolvePath(path).toString))
-    }
+    val p = Paths.get(path)
+    val files =
+      if (allSnapshots && Files.isDirectory(p)) FmpReader.snapshots(p)
+      else Seq(FmpReader.resolvePath(path))
+    files.map(f => FmpInputPartition(f.toString): InputPartition).toArray
   }
 }
 
@@ -275,85 +263,54 @@ class FmpCountReaderFactory extends PartitionReaderFactory {
 case class FmpInputPartition(resolvedPath: String) extends InputPartition
 
 class FmpPartitionReaderFactory(allColumns: Array[String], requiredSchema: StructType,
-    progressEvery: Long, repeatingAsArray: Boolean,
-    pushed: Array[Filter] = Array.empty)
+    repeatingAsArray: Boolean, pushed: Array[Filter])
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val path = partition.asInstanceOf[FmpInputPartition].resolvedPath
-    if (repeatingAsArray)
-      new FmpArrayPartitionReader(path, allColumns, requiredSchema, progressEvery)
-    else
-      new FmpPartitionReader(path, allColumns, requiredSchema.fieldNames, progressEvery,
-        pushed)
-  }
-}
-
-/** Progress-line plumbing shared by both partition readers: a line every
-  * `progressEvery` records plus a final rec/s summary on close (the tqdm
-  * analogue of the reference's `print` command, _cli.py:56-68). Output
-  * goes through System.out (resolved per call), not Scala's Console:
-  * executor task threads inherit Console's stream from pool creation
-  * time, which would bypass any later redirect. */
-trait FmpProgress {
-  protected def path: String
-  protected def progressEvery: Long
-  protected var nRecords = 0L
-  private val startNanos = System.nanoTime()
-  protected lazy val fileName: String = java.nio.file.Paths.get(path).getFileName.toString
-
-  private def recPerSec: Long = {
-    val secs = (System.nanoTime() - startNanos) / 1e9
-    if (secs > 0) (nRecords / secs).toLong else 0L
-  }
-
-  /** Call after each produced record. */
-  protected def recordProduced(): Unit = {
-    nRecords += 1
-    if (progressEvery > 0 && nRecords % progressEvery == 0)
-      System.out.println(s"[fmp] $fileName: $nRecords records ($recPerSec rec/s)")
-  }
-
-  /** Call once from close(). */
-  protected def reportFinal(): Unit =
-    if (progressEvery > 0)
-      System.out.println(s"[fmp] $fileName: parsed $nRecords records ($recPerSec rec/s)")
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new FmpPartitionReader(partition.asInstanceOf[FmpInputPartition].resolvedPath,
+      allColumns, requiredSchema, repeatingAsArray, pushed)
 }
 
 /** Executor-side streaming reader: StAX-parses the document and projects
-  * only the pruned columns into InternalRows. */
-class FmpPartitionReader(val path: String, allColumns: Array[String], requiredColumns: Array[String],
-    val progressEvery: Long = 0L, pushedFilters: Array[Filter] = Array.empty)
-    extends PartitionReader[InternalRow] with FmpProgress {
-  private val it = new FmpReader.FmpRowIterator(
-    FmpReader.open(java.nio.file.Paths.get(path)))
-  // Map each required column to its position in the parsed row. Resolution
-  // is by clean name against the FILE's own header. Classification of the
-  // file checks the FULL schema (not just the pruned columns, which may
-  // all be absent from an old snapshot): if the file's header shares any
-  // name with the schema, it is a by-name file and a missing column is
-  // schema evolution — yield null, never another column's values. Only a
-  // header sharing NOTHING with the schema is an external positional
-  // schema, where the ordinal fallback applies.
+  * only the pruned columns into InternalRows.
+  *
+  * Positional mode reads each column from the row's flat `<DATA>` cells.
+  * `repeatingAsArray` mode reads it from the row's `<COL>` instead and
+  * converts by schema type: MAXREPEAT>1 fields (`array<string>`) carry
+  * the full repetition as ArrayData, MAXREPEAT=1 fields (`string`) take
+  * the column's first value. A snapshot whose own header declared the
+  * field MAXREPEAT=1 still converts fine (its one-element column becomes
+  * a one-element array). */
+class FmpPartitionReader(path: String, allColumns: Array[String], requiredSchema: StructType,
+    repeatingAsArray: Boolean, pushedFilters: Array[Filter])
+    extends PartitionReader[InternalRow] {
+  private val it = new FmpReader.FmpRowIterator(FmpReader.open(Paths.get(path)),
+    repeatingAsArray = repeatingAsArray)
+  // Resolution of a schema column to its position in the file — a flat
+  // cell index, or a `<COL>` index in array mode — is by clean name
+  // against the FILE's own header. Classification of the file checks the
+  // FULL schema (not just the pruned columns, which may all be absent from
+  // an old snapshot): if the file's header shares any name with the
+  // schema, it is a by-name file and a missing column is schema evolution
+  // — yield null, never another column's values. Only a header sharing
+  // NOTHING with the schema is an external positional schema, where the
+  // ordinal fallback applies.
   private val fileIsByName: Boolean =
     allColumns.exists(c => it.schema.cleanNames.contains(c))
-  private val indices: Array[Int] = requiredColumns.map { c =>
-    val i = it.schema.cleanNames.indexOf(c)
-    if (i >= 0) i
-    else if (fileIsByName) -1
-    else allColumns.indexOf(c)
+  private def resolve(column: String): Int = {
+    val i = it.schema.cleanNames.indexOf(column)
+    if (i >= 0) i else if (fileIsByName) -1 else allColumns.indexOf(column)
   }
+  private val indices: Array[Int] = requiredSchema.fieldNames.map(resolve)
+  private val isArray: Array[Boolean] =
+    requiredSchema.fields.map(_.dataType.isInstanceOf[ArrayType])
   private var current: InternalRow = _
 
-  // Filter-attribute resolution uses the same by-name/positional logic as
-  // the data columns — filters may reference columns Spark pruned OUT of
-  // the required schema (it trusts the claim and drops both the Filter
-  // node and the column), so resolution is independent of `indices`.
+  // Filters may reference columns Spark pruned OUT of the required schema
+  // (it trusts the claim and drops both the Filter node and the column),
+  // so their resolution is independent of `indices`.
   private val filterIdx = scala.collection.mutable.HashMap.empty[String, Int]
   private def rawValue(raw: Array[String], name: String): String = {
-    val idx = filterIdx.getOrElseUpdate(name, {
-      val i = it.schema.cleanNames.indexOf(name)
-      if (i >= 0) i else if (fileIsByName) -1 else allColumns.indexOf(name)
-    })
+    val idx = filterIdx.getOrElseUpdate(name, resolve(name))
     if (idx >= 0 && idx < raw.length) raw(idx) else null
   }
 
@@ -369,6 +326,34 @@ class FmpPartitionReader(val path: String, allColumns: Array[String], requiredCo
     true
   }
 
+  private def utf8(s: String): UTF8String = if (s == null) null else UTF8String.fromString(s)
+
+  // A string-typed column receiving a multi-<DATA> cell (e.g. an
+  // allSnapshots read whose unified schema came from a MAXREPEAT=1
+  // snapshot) keeps only the first repetition — warned once per
+  // file+column, never silently (the module contract).
+  private val warnedTruncation = scala.collection.mutable.Set.empty[Int]
+
+  /** Required column `i` of the row just read, in array mode. */
+  private def colValue(raw: Array[String], i: Int): Any = {
+    val c = indices(i)
+    if (c < 0 || c >= it.colCount) null
+    else {
+      val from = it.colStart(c)
+      val n = it.colEnd(c) - from
+      if (isArray(i)) new GenericArrayData(Array.tabulate[Any](n)(k => utf8(raw(from + k))))
+      else {
+        if (n > 1 && warnedTruncation.add(i))
+          System.err.println(s"[fmp] ${Paths.get(path).getFileName}: column " +
+            s"'${requiredSchema.fieldNames(i)}' carries $n <DATA> " +
+            "repetitions but the unified schema types it string; keeping the " +
+            "first repetition only (re-read with repeatingAsArray inferred " +
+            "from this snapshot to preserve all repetitions)")
+        if (n == 0) null else utf8(raw(from))
+      }
+    }
+  }
+
   override def next(): Boolean = {
     while (it.hasNext) {
       val raw = it.next()
@@ -376,13 +361,15 @@ class FmpPartitionReader(val path: String, allColumns: Array[String], requiredCo
         val values = new Array[Any](indices.length)
         var i = 0
         while (i < indices.length) {
-          val idx = indices(i)
-          values(i) = if (idx >= 0 && idx < raw.length && raw(idx) != null)
-            UTF8String.fromString(raw(idx)) else null
+          values(i) =
+            if (repeatingAsArray) colValue(raw, i)
+            else {
+              val idx = indices(i)
+              if (idx >= 0 && idx < raw.length) utf8(raw(idx)) else null
+            }
           i += 1
         }
         current = new GenericInternalRow(values)
-        recordProduced()
         return true
       }
     }
@@ -390,79 +377,5 @@ class FmpPartitionReader(val path: String, allColumns: Array[String], requiredCo
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = {
-    reportFinal()
-    it.close()
-  }
-}
-
-/** Executor-side reader for `repeatingAsArray` mode: the COL-grouping
-  * iterator yields every cell as the `<COL>`'s `<DATA>` list, and this
-  * reader converts each required column by its schema type — MAXREPEAT>1
-  * fields (`array<string>`) carry the full repetition as ArrayData,
-  * MAXREPEAT=1 fields (`string`) take the cell's single value. Column
-  * resolution is by clean name against the file's own header with the
-  * same by-name/positional classification as the flat reader, so
-  * multi-snapshot (`allSnapshots`) reads evolve by name here too; a
-  * snapshot whose own header declared the field MAXREPEAT=1 still
-  * converts fine (its one-element cell becomes a one-element array). */
-class FmpArrayPartitionReader(val path: String, allColumns: Array[String],
-    requiredSchema: StructType, val progressEvery: Long = 0L)
-    extends PartitionReader[InternalRow] with FmpProgress {
-  private val it = new FmpReader.FmpColRowIterator(
-    FmpReader.open(java.nio.file.Paths.get(path)))
-  private val fileIsByName: Boolean =
-    allColumns.exists(c => it.schema.cleanNames.contains(c))
-  private val indices: Array[Int] = requiredSchema.fieldNames.map { c =>
-    val i = it.schema.cleanNames.indexOf(c)
-    if (i >= 0) i
-    else if (fileIsByName) -1
-    else allColumns.indexOf(c)
-  }
-  private val isArray: Array[Boolean] =
-    requiredSchema.fields.map(_.dataType.isInstanceOf[ArrayType])
-  private var current: InternalRow = _
-  // A string-typed column receiving a multi-<DATA> cell (e.g. an
-  // allSnapshots read whose unified schema came from a MAXREPEAT=1
-  // snapshot) keeps only the first repetition — warned once per
-  // file+column, never silently (the module contract).
-  private val warnedTruncation = scala.collection.mutable.Set.empty[Int]
-
-  override def next(): Boolean =
-    if (it.hasNext) {
-      val raw = it.next()
-      val values = new Array[Any](indices.length)
-      var i = 0
-      while (i < indices.length) {
-        val idx = indices(i)
-        values(i) =
-          if (idx < 0 || idx >= raw.length) null
-          else {
-            val cell = raw(idx)
-            if (isArray(i))
-              new GenericArrayData(cell.map(s =>
-                if (s == null) null else UTF8String.fromString(s)): Array[Any])
-            else {
-              if (cell.length > 1 && warnedTruncation.add(i))
-                System.err.println(s"[fmp] $fileName: column " +
-                  s"'${requiredSchema.fieldNames(i)}' carries ${cell.length} <DATA> " +
-                  "repetitions but the unified schema types it string; keeping the " +
-                  "first repetition only (re-read with repeatingAsArray inferred " +
-                  "from this snapshot to preserve all repetitions)")
-              if (cell.isEmpty || cell(0) == null) null
-              else UTF8String.fromString(cell(0))
-            }
-          }
-        i += 1
-      }
-      current = new GenericInternalRow(values)
-      recordProduced()
-      true
-    } else false
-
-  override def get(): InternalRow = current
-  override def close(): Unit = {
-    reportFinal()
-    it.close()
-  }
+  override def close(): Unit = it.close()
 }

@@ -1,7 +1,8 @@
 package graft.sinks
 
+import java.io.InputStream
 import java.nio.file.{Files, Paths}
-import java.security.MessageDigest
+import java.security.{DigestInputStream, MessageDigest}
 import java.sql.DriverManager
 import java.time.Instant
 import java.util.Properties
@@ -336,28 +337,23 @@ object Sinks {
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).orc(path)
 
-  /** SHA-256 of a file's raw bytes — driver-side by design; the
+  /** SHA-256 of a file's raw bytes, streamed — driver-side by design; the
     * data-plane analogue is `sha2(col, 256)` (B26). */
   def sha256OfFile(path: String): String = {
-    val digest = MessageDigest.getInstance("SHA-256")
-    val bytes = Files.readAllBytes(Paths.get(path))
-    digest.digest(bytes).map("%02x".format(_)).mkString
+    val in = sha256Tap(Files.newInputStream(Paths.get(path)))
+    try drainSha256(in) finally in.close()
   }
 
-  /** Streamed SHA-256 of an InputStream's contents, closing it when done.
-    * The reference hashes the content read from the already-decompressed
-    * handle (_cli.py:146-148), so for `.bz2` snapshots the provenance
-    * hash must cover the XML bytes, not the compressed archive. */
-  def sha256OfStream(in: java.io.InputStream): String = {
-    val digest = MessageDigest.getInstance("SHA-256")
+  /** Wraps `in` so every byte read through it feeds a SHA-256 digest. */
+  def sha256Tap(in: InputStream): DigestInputStream =
+    new DigestInputStream(in, MessageDigest.getInstance("SHA-256"))
+
+  /** Reads `in` to its end and returns the lowercase hex SHA-256 of every
+    * byte that passed through it, including those a parser consumed
+    * before the call. The caller closes `in`. */
+  def drainSha256(in: DigestInputStream): String = {
     val buf = new Array[Byte](65536)
-    try {
-      var n = in.read(buf)
-      while (n >= 0) {
-        if (n > 0) digest.update(buf, 0, n)
-        n = in.read(buf)
-      }
-    } finally in.close()
-    digest.digest().map("%02x".format(_)).mkString
+    while (in.read(buf) != -1) {}
+    in.getMessageDigest.digest().map("%02x".format(_)).mkString
   }
 }

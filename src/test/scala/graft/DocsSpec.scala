@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * from `SparkEntry` makes the doc physically unable to drift: any new
   * QueryDef fails this spec until the preamble is updated. The same
   * holds for the one session factory: a new `SparkSession.builder` in
-  * main code fails here. */
+  * main code fails here, and for the one hardened XML factory. */
 class DocsSpec extends AnyFunSuite {
 
   private val operatorsMd = {
@@ -45,20 +45,32 @@ class DocsSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")
   }
 
-  test("main code builds sessions only through Engine.session") {
-    // Comment lines do not count: a usage example in scaladoc is fine.
-    def builds(src: String): Boolean = src.linesIterator.map(_.trim)
+  /** Main-code files naming `token` in a non-comment line (a usage
+    * example in scaladoc is fine). */
+  private def mainFilesUsing(token: String): Seq[String] = {
+    def uses(src: String): Boolean = src.linesIterator.map(_.trim)
       .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
-      .exists(_.contains("SparkSession.builder"))
+      .exists(_.contains(token))
     val stream = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-    val builders =
-      try {
-        import scala.jdk.CollectionConverters._
-        stream.iterator().asScala.filter(_.toString.endsWith(".scala"))
-          .filter(p => builds(java.nio.file.Files.readString(p)))
-          .map(_.toString).toSeq
-      } finally stream.close()
+    try {
+      import scala.jdk.CollectionConverters._
+      stream.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter(p => uses(java.nio.file.Files.readString(p)))
+        .map(_.toString).toSeq
+    } finally stream.close()
+  }
+
+  test("main code builds sessions only through Engine.session") {
+    val builders = mainFilesUsing("SparkSession.builder")
     assert(builders == Seq("src/main/scala/graft/Engine.scala"),
       s"SparkSession.builder outside the Engine.session factory: $builders")
+  }
+
+  test("main code parses XML only through FmpReader's hardened factory") {
+    // FmpReader's one factory turns off DTDs and external entities (the
+    // XXE guard); a second XMLInputFactory would parse without it.
+    val factories = mainFilesUsing("XMLInputFactory")
+    assert(factories == Seq("src/main/scala/graft/fmp/FmpReader.scala"),
+      s"XMLInputFactory outside FmpReader: $factories")
   }
 }

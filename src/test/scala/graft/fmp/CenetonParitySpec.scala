@@ -50,7 +50,7 @@ class CenetonParitySpec extends SparkSpec {
   }
 
   test("126 real field names: reader schema equals the curated clean names") {
-    val (df, schema) = FmpReader.readWithSchema(spark, fixture(50))
+    val (df, schema, _) = FmpReader.readWithSchemaAndSha(spark, fixture(50))
     assert(schema.cleanNames == goldenRows.map(r => r(1)),
       "sanitized columns must match field_mappings.csv clean names in order")
     assert(df.columns.length == 126)
@@ -58,14 +58,14 @@ class CenetonParitySpec extends SparkSpec {
   }
 
   test("headersDf reproduces the reference dump_headers pairs exactly") {
-    val (df, _) = FmpReader.readWithSchema(spark, fixture(3))
+    val (df, _, _) = FmpReader.readWithSchemaAndSha(spark, fixture(3))
     val got = Sinks.headersDf(spark, df).collect().map(r => (r.getString(0), r.getString(1)))
     val expected = goldenRows.map(r => (r(0), r(1)))
     assert(got.toSeq == expected)
   }
 
   test("English mapping renames all 126 columns via the curated CSV") {
-    val (df, _) = FmpReader.readWithSchema(spark, fixture(3))
+    val (df, _, _) = FmpReader.readWithSchemaAndSha(spark, fixture(3))
     val res = getClass.getClassLoader.getResource("field_mappings.csv").getPath
     val mapping = MappingFile.readMapping(spark, s"$res:english_name")
     val renamed = MappingFile.applyMapping(df, mapping)
@@ -74,7 +74,7 @@ class CenetonParitySpec extends SparkSpec {
   }
 
   test("JSONL line order preserves document order (reference stream parity)") {
-    val (df, _) = FmpReader.readWithSchema(spark, fixture(30))
+    val (df, _, _) = FmpReader.readWithSchemaAndSha(spark, fixture(30))
     val lines = Sinks.toJsonlLines(df.select("aantal_bedr_")).toSeq
     // column 0 is null when (i + 0) % 5 == 0, i.e. rows 5,10,...
     val expected = (1 to 30).map(i =>

@@ -55,7 +55,7 @@ class FmpDataSourceSpec extends SparkSpec {
   test("V2 scan rows equal the driver-parallelize reader rows") {
     val path = writeFixture(50)
     val v2 = spark.read.format("fmp").load(path).orderBy("aantal_bedr_").collect().toSeq
-    val v1 = FmpReader.readWithSchema(spark, path)._1.orderBy("aantal_bedr_").collect().toSeq
+    val v1 = FmpReader.readWithSchemaAndSha(spark, path)._1.orderBy("aantal_bedr_").collect().toSeq
     assert(v2 == v1)
     assert(v2.size == 50)
     // FmpReader.read IS the V2 path now (the default; VERDICT r1 item 2)
@@ -156,7 +156,7 @@ class FmpDataSourceSpec extends SparkSpec {
     val v2 = spark.read.format("fmp").load(path)
     // Ground truth: the driver-parallelize reader, whose filters Spark
     // itself evaluates post-scan.
-    val v1 = FmpReader.readWithSchema(spark, path)._1
+    val v1 = FmpReader.readWithSchemaAndSha(spark, path)._1
     val predicates: Seq[org.apache.spark.sql.Column] = Seq(
       col("jaar").isNull,                        // <DATA/> rows (i % 3 == 0)
       col("jaar").isNotNull && col("jaar") < "1610",
@@ -241,7 +241,7 @@ class FmpDataSourceSpec extends SparkSpec {
     val p = Files.createTempDirectory("fmpfuzz").resolve("export.xml")
     Files.write(p, xml.getBytes(StandardCharsets.UTF_8))
     val v2 = spark.read.format("fmp").load(p.toString)
-    val v1 = FmpReader.readWithSchema(spark, p.toString)._1
+    val v1 = FmpReader.readWithSchemaAndSha(spark, p.toString)._1
     val cols = Seq("c1", "c2", "c3")
     def c() = col(cols(rnd.nextInt(cols.length)))
     def v() = pool(rnd.nextInt(pool.length))

@@ -53,7 +53,7 @@ class FmpReaderSpec extends SparkSpec {
   private def stream(s: String) = new ByteArrayInputStream(s.getBytes(StandardCharsets.UTF_8))
 
   test("basic 3x3: schema, clean names, string values") {
-    val (df, schema) = FmpReader.readWithSchema(spark, {
+    val (df, schema, _) = FmpReader.readWithSchemaAndSha(spark, {
       val p = Files.createTempDirectory("fmp").resolve("basic.xml")
       write(p, doc(3, 3, threeRows)).toString
     })
@@ -70,7 +70,7 @@ class FmpReaderSpec extends SparkSpec {
 
   test("empty <DATA/> and <DATA></DATA> both become null") {
     val p = Files.createTempDirectory("fmp").resolve("nulls.xml")
-    val (df, _) = FmpReader.readWithSchema(spark, write(p, doc(3, 3, threeRows)).toString)
+    val (df, _, _) = FmpReader.readWithSchemaAndSha(spark, write(p, doc(3, 3, threeRows)).toString)
     val rows = df.orderBy("aantal_bedr_").collect()
     val r5 = rows.find(_.getString(0) == "5").get
     val r1 = rows.find(_.getString(0) == "1").get
@@ -107,9 +107,9 @@ class FmpReaderSpec extends SparkSpec {
     val bz = dir.resolve("basic.xml.bz2")
     val out = new BZip2CompressorOutputStream(new FileOutputStream(bz.toFile))
     out.write(xml.getBytes(StandardCharsets.UTF_8)); out.close()
-    val (dfBz, _) = FmpReader.readWithSchema(spark, bz.toString)
+    val (dfBz, _, _) = FmpReader.readWithSchemaAndSha(spark, bz.toString)
     val plain = write(dir.resolve("basic.xml"), xml)
-    val (dfPlain, _) = FmpReader.readWithSchema(spark, plain.toString)
+    val (dfPlain, _, _) = FmpReader.readWithSchemaAndSha(spark, plain.toString)
     assert(dfBz.collect().toSeq == dfPlain.collect().toSeq)
   }
 
@@ -131,6 +131,22 @@ class FmpReaderSpec extends SparkSpec {
     val broken = doc(3, 3, "").replace("</RESULTSET>", "<ROW><COL><DATA>unterminated")
     val schema = FmpReader.readSchema(stream(broken))
     assert(schema.cleanNames.size == 3)
+  }
+
+  test("malformed header attributes fail with an error naming element and attribute") {
+    def fails(broken: String): String =
+      intercept[IllegalArgumentException](FmpReader.readSchema(stream(broken))).getMessage
+    val good = doc(3, 3, threeRows)
+    val noFound = fails(good.replace("""<RESULTSET FOUND="3">""", "<RESULTSET>"))
+    assert(noFound.contains("<RESULTSET>") && noFound.contains("FOUND"), noFound)
+    val badFound = fails(good.replace("""FOUND="3"""", """FOUND="x""""))
+    assert(badFound.contains("""<RESULTSET FOUND="x">"""), badFound)
+    val noRepeat = fails(good.replace("""MAXREPEAT="1" NAME="Jaar"""", """NAME="Jaar""""))
+    assert(noRepeat.contains("<FIELD>") && noRepeat.contains("MAXREPEAT"), noRepeat)
+    val noName = fails(good.replace("""NAME="Jaar" """, ""))
+    assert(noName.contains("<FIELD>") && noName.contains("NAME"), noName)
+    val badRecords = fails(good.replace("""RECORDS="3"""", """RECORDS="3.5""""))
+    assert(badRecords.contains("""<DATABASE RECORDS="3.5">"""), badRecords)
   }
 
   test("MAXREPEAT > 1 is parsed (warned, first <DATA> read — reference parity)") {
@@ -200,5 +216,53 @@ class FmpReaderSpec extends SparkSpec {
     val pruned = spark.read.format("fmp").option("repeatingAsArray", "true")
       .load(p.toString).select("jaar").collect()
     assert(pruned.map(_.getSeq[String](0).length).sorted.toSeq == Seq(1, 2, 2))
+  }
+
+  test("positional cells equal the <COL> cells flattened, through the iterator and format(\"fmp\")") {
+    // One repeating <COL>, a <DATA/>, a trailing empty repetition and an
+    // empty <COL></COL>.
+    val xml = doc(3, 3,
+      """    <ROW MODID="0" RECORDID="1">
+        |      <COL><DATA>3</DATA></COL>
+        |      <COL><DATA/></COL>
+        |      <COL><DATA>1637</DATA><DATA>1654</DATA></COL>
+        |    </ROW>
+        |    <ROW MODID="0" RECORDID="2">
+        |      <COL><DATA>5</DATA></COL>
+        |      <COL><DATA>Vondel</DATA></COL>
+        |      <COL><DATA>ca. 1660</DATA><DATA/></COL>
+        |    </ROW>
+        |    <ROW MODID="0" RECORDID="3">
+        |      <COL><DATA>1</DATA></COL>
+        |      <COL><DATA>Bredero</DATA></COL>
+        |      <COL></COL>
+        |    </ROW>""".stripMargin)
+      .replace("""MAXREPEAT="1" NAME="Jaar"""", """MAXREPEAT="2" NAME="Jaar"""")
+    val it = new FmpReader.FmpRowIterator(stream(xml), repeatingAsArray = true)
+    val parsed = try it.map { flat =>
+      val cols = (0 until it.colCount).map(c => flat.slice(it.colStart(c), it.colEnd(c)).toSeq)
+      (flat.toSeq, cols)
+    }.toList finally it.close()
+    assert(parsed.map(_._2) == Seq(
+      Seq(Seq("3"), Seq(null), Seq("1637", "1654")),
+      Seq(Seq("5"), Seq("Vondel"), Seq("ca. 1660", null)),
+      Seq(Seq("1"), Seq("Bredero"), Seq())))
+    parsed.foreach { case (flat, cols) => assert(flat == cols.flatten) }
+    assert(parsed(2)._1 == Seq("1", "Bredero"), "an empty <COL> yields no positional cell")
+
+    val p = write(Files.createTempDirectory("fmpviews").resolve("views.xml"), xml).toString
+    def byKey(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r).toMap
+    val positional = byKey(spark.read.format("fmp").load(p))
+    val arrays = byKey(spark.read.format("fmp").option("repeatingAsArray", "true").load(p))
+    parsed.foreach { case (flat, _) =>
+      val key = flat.head
+      assert(positional(key).toSeq == flat.padTo(3, null).take(3), s"positional row $key")
+      val a = arrays(key)
+      assert(Seq(a.getString(0), a.getString(1)) ++ a.getSeq[String](2) == flat,
+        s"array row $key flattened")
+    }
+    assert(arrays("1").getSeq[String](2).isEmpty, "an empty <COL> is an empty array")
+    assert(positional("1").isNullAt(2))
   }
 }
