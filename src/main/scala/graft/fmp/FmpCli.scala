@@ -75,8 +75,8 @@ object FmpCli {
       // ONE stream, ONE decompression: header counts line, then the same
       // constant-memory StAX iterator continues over the rows with the
       // progress lines (the reference's tqdm analogue, _cli.py:56-68 —
-      // also a single pass). A count of one non-splittable document gains
-      // nothing from a Spark job, so the driver counts.
+      // also a single pass). The progress lines follow one ordered pass,
+      // so the driver counts.
       val resolved = FmpReader.resolvePath(file)
       val it = new FmpReader.FmpRowIterator(FmpReader.open(resolved))
       try {
@@ -98,13 +98,9 @@ object FmpCli {
       val it = new FmpReader.FmpRowIterator(FmpReader.open(FmpReader.resolvePath(file)))
       try {
         val struct = FmpReader.toStructType(it.schema)
-        it.map(arr => org.apache.spark.sql.Row.fromSeq(arr.toSeq))
-          .grouped(JsonBatchRows)
-          .foreach { batch =>
-            val df = spark.createDataFrame(
-              spark.sparkContext.parallelize(batch, 1), struct)
-            Sinks.toJsonlLines(df).foreach(println)
-          }
+        it.grouped(JsonBatchRows).foreach { batch =>
+          Sinks.toJsonlLines(FmpReader.driverFrame(spark, batch, struct)).foreach(println)
+        }
       } finally it.close()
     }
 

@@ -3,6 +3,7 @@ package graft.fmp
 import java.io.{BufferedInputStream, FileInputStream, InputStream}
 import java.nio.file.{Files, Path, Paths}
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
@@ -43,24 +44,30 @@ final case class FmpSchema(
   * lexicographically last `*.bz2` snapshot; `.bz2` decompresses
   * transparently.
   *
-  * Architecture: bz2 + a single XML document are non-splittable, so the
-  * document — not the byte range — is the parallelism unit. The default
-  * [[read]] goes through the `format("fmp")` DataSource V2 provider,
-  * which infers the schema from the `<METADATA>` header on the driver and
-  * runs the constant-memory StAX pull parse inside executor tasks (unlike
-  * the reference, which retains the whole lxml element tree —
-  * SURVEY.md §4.1). [[readWithSchemaAndSha]] keeps the driver-side parse
-  * for callers that need the `FmpSchema` record counts with the data.
+  * Architecture: the default [[read]] goes through the `format("fmp")`
+  * DataSource V2 provider, which infers the schema from the `<METADATA>`
+  * header on the driver and runs the constant-memory StAX pull parse
+  * inside executor tasks (unlike the reference, which retains the whole
+  * lxml element tree — SURVEY.md §4.1). An uncompressed export is cut
+  * into row-aligned byte ranges, one task each, every range parsed by
+  * this one [[FmpRowIterator]] over the header, the range and the tail;
+  * a bz2 snapshot is not byte-splittable and is one task.
+  * [[readWithSchemaAndSha]] keeps the driver-side parse for callers that
+  * need the `FmpSchema` record counts with the data.
   */
 object FmpReader {
   private val log = LoggerFactory.getLogger(getClass)
+
+  /** A bz2-compressed export, by extension: decompressed on open, and
+    * never cut into byte ranges. */
+  private[fmp] def isBz2(path: Path): Boolean = path.getFileName.toString.endsWith(".bz2")
 
   /** The `*.bz2` snapshots in `dir`, sorted by file name (oldest
     * first); a directory without one is an error. */
   private[fmp] def snapshots(dir: Path): Seq[Path] = {
     val listing = Files.list(dir)
     val snaps = try listing.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".bz2")).toSeq.sortBy(_.getFileName.toString)
+      .filter(isBz2).toSeq.sortBy(_.getFileName.toString)
     finally listing.close()
     require(snaps.nonEmpty, s"No *.bz2 snapshots in directory $dir")
     snaps
@@ -82,7 +89,7 @@ object FmpReader {
   def open(path: Path): InputStream = {
     streamOpens.incrementAndGet()
     val raw = new BufferedInputStream(new FileInputStream(path.toFile))
-    if (path.getFileName.toString.endsWith(".bz2")) new BZip2CompressorInputStream(raw)
+    if (isBz2(path)) new BZip2CompressorInputStream(raw)
     else raw
   }
 
@@ -112,10 +119,12 @@ object FmpReader {
 
   /** Advance `r` through the FMPXMLRESULT header and stop just after the
     * `<RESULTSET>` open tag. Shared by the schema-only path and the row
-    * iterator so warnings and validation live in exactly one place. */
+    * iterator so warnings and validation live in exactly one place.
+    * `warn = false` silences both header warnings (a range other than a
+    * split file's first); `warnRepeating = false` only the MAXREPEAT one. */
   private def parseHeader(r: XMLStreamReader,
       headerStrategy: Seq[String] => Seq[String],
-      warnRepeating: Boolean = true): FmpSchema = {
+      warn: Boolean = true, warnRepeating: Boolean = true): FmpSchema = {
     var dbName = ""
     var dbRecords = -1L
     val fields = ArrayBuffer.empty[FmpField]
@@ -123,7 +132,7 @@ object FmpReader {
       r.next() match {
         case XMLStreamConstants.START_ELEMENT if r.getLocalName == "RESULTSET" =>
           val found = numberAttr(r, "RESULTSET", "FOUND", _.toLong)
-          if (found != dbRecords)
+          if (found != dbRecords && warn)
             log.warn(s"Number of records in header ($dbRecords) does not match " +
               s"number of records in result set ($found). " +
               "We are looking at a subset of the database.")
@@ -146,7 +155,7 @@ object FmpReader {
           // (namedtuple arity failure at fmp_reader.py:112). This parser
           // reproduces that per-<DATA> behavior exactly for parity, but
           // refuses to do it silently.
-          if (f.maxRepeat > 1 && warnRepeating)
+          if (f.maxRepeat > 1 && warn && warnRepeating)
             log.warn(s"Field '${f.name}' declares MAXREPEAT=${f.maxRepeat}; repeating " +
               "fields are NOT supported in positional mode (reference-parity): each " +
               "<DATA> becomes its own cell, so a row carrying more than one <DATA> for " +
@@ -187,13 +196,14 @@ object FmpReader {
     * row overflows its namedtuple). Callers that take that view pass
     * `repeatingAsArray = true`, which silences the positional-mode
     * MAXREPEAT warning. The boundaries stay valid until the next
-    * hasNext/next call. */
+    * hasNext/next call. `warn = false` silences the header warnings, for
+    * every range of a split file but the first. */
   final class FmpRowIterator(in: InputStream,
       headerStrategy: Seq[String] => Seq[String] = Sanitize.defaultHeaderStrategy,
-      repeatingAsArray: Boolean = false)
+      repeatingAsArray: Boolean = false, warn: Boolean = true)
       extends Iterator[Array[String]] with AutoCloseable {
     private val r = newStreamReader(in)
-    val schema: FmpSchema = parseHeader(r, headerStrategy, warnRepeating = !repeatingAsArray)
+    val schema: FmpSchema = parseHeader(r, headerStrategy, warn, warnRepeating = !repeatingAsArray)
 
     private val current = ArrayBuffer.empty[String]
     private var colEnds = new Array[Int](math.max(1, schema.fields.size))
@@ -273,27 +283,40 @@ object FmpReader {
     *
     * Driver-buffered by design: a FileMaker snapshot is one bounded
     * curated database, and the JDBC bulk load is driver-adjacent anyway
-    * (single-transaction parity coalesces to one connection). The
-    * executor-side streaming path for analytics remains [[read]]. */
+    * (single-transaction parity coalesces to one connection). The rows
+    * reach Spark through [[driverFrame]]. The executor-side streaming path
+    * for analytics remains [[read]]. */
   def readWithSchemaAndSha(spark: SparkSession, path: String,
       headerStrategy: Seq[String] => Seq[String] = Sanitize.defaultHeaderStrategy)
       : (DataFrame, FmpSchema, String) = {
     val in = Sinks.sha256Tap(open(resolvePath(path)))
-    val rows = ArrayBuffer.empty[Row]
+    val rows = ArrayBuffer.empty[Array[String]]
     val it = new FmpRowIterator(in, headerStrategy)
     val (schema, sha) = try {
-      while (it.hasNext) rows += Row.fromSeq(it.next().toSeq)
+      while (it.hasNext) rows += it.next()
       (it.schema, Sinks.drainSha256(in))
     } finally it.close()
-    val struct = toStructType(schema)
-    val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism, rows.size / 1000 + 1))
-    (spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, parts), struct),
-      schema, sha)
+    (driverFrame(spark, rows.toSeq, toStructType(schema)), schema, sha)
+  }
+
+  /** Rows parsed on the driver as a DataFrame over a local relation, in
+    * row order. The rows are encoded once, on the driver, and its scan
+    * ships them to the task as compact `UnsafeRow`s, not as
+    * Java-serialized `Row`s the task must deserialize and encode.
+    * Each row takes the schema's width, as in the V2 positional reader: a
+    * cell past the last column is dropped (a misaligned repeating row),
+    * a missing one is null. */
+  def driverFrame(spark: SparkSession, rows: Seq[Array[String]], struct: StructType): DataFrame = {
+    val width = struct.length
+    spark.createDataFrame(rows.map { r =>
+      val cells = if (r.length == width) r else java.util.Arrays.copyOf(r, width)
+      Row.fromSeq(ArraySeq.unsafeWrapArray(cells))
+    }.asJava, struct)
   }
 
   /** Default read path: the DataSource V2 `format("fmp")` source, which
     * parses rows INSIDE executor tasks (the driver touches only the
-    * `<METADATA>` header for schema inference). The driver-parallelize
+    * `<METADATA>` header for schema inference). The driver-side
     * [[readWithSchemaAndSha]] remains for callers that need the
     * `FmpSchema` counts and the content hash alongside the data. */
   def read(spark: SparkSession, path: String): DataFrame =

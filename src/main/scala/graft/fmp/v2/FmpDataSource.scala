@@ -1,10 +1,12 @@
 package graft.fmp.v2
 
+import java.io.InputStream
 import java.nio.file.{Files, Paths}
 import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -12,10 +14,12 @@ import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountS
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{And, DataSourceRegister, EqualNullSafe, EqualTo, Filter, In, IsNotNull, IsNull, Not, Or, StringContains, StringEndsWith, StringStartsWith}
 import org.apache.spark.sql.types.{ArrayType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.slf4j.LoggerFactory
 
 import graft.fmp.FmpReader
 
@@ -30,10 +34,11 @@ import graft.fmp.FmpReader
   *  - row parsing happens INSIDE the executor task with the same
   *    constant-memory StAX pull iterator — the document never materializes
   *    on the driver (this IS the default [[FmpReader.read]] path; the
-  *    driver-parallelize form survives only in `readWithSchemaAndSha`);
-  *  - one InputPartition per document: bz2 + single-XML-document inputs
-  *    are not byte-splittable, so the file is the unit of parallelism —
-  *    a directory of exports scans as one task per snapshot;
+  *    driver-side parse survives only in `readWithSchemaAndSha`);
+  *  - an uncompressed export is cut into row-aligned byte ranges sized
+  *    by Spark's own file-split rule, one task each ([[FmpPartitions]]);
+  *    a bz2 snapshot is not byte-splittable and scans as one task, so a
+  *    directory of exports scans as one task per snapshot;
   *  - column pruning is pushed into the reader's ROW PROJECTION: every
   *    `<DATA>` cell is still parsed (StAX must walk the document), but
   *    only required columns are converted to UTF8String and carried in
@@ -200,8 +205,11 @@ class FmpScan(fullSchema: StructType, required: StructType, path: String,
     s"FmpScan $path, PushedFilters: [${pushed.mkString(", ")}], " +
       s"ReadSchema: ${required.catalogString}"
 
-  override def planInputPartitions(): Array[InputPartition] =
-    FmpPartitions.plan(path, allSnapshots)
+  // Spark may ask a scan for its partitions more than once; the byte scan
+  // that cuts the ranges runs once per scan.
+  private lazy val partitions = FmpPartitions.plan(path, allSnapshots, splitRows = true)
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
   override def createReaderFactory(): PartitionReaderFactory =
     new FmpPartitionReaderFactory(fullSchema.fieldNames, required, repeatingAsArray, pushed)
@@ -210,17 +218,43 @@ class FmpScan(fullSchema: StructType, required: StructType, path: String,
 object FmpPartitions {
   /** Default directory semantics follow the reference (latest *.bz2
     * snapshot). With `allSnapshots=true` every archive in the directory
-    * becomes its own partition — the document, not the byte range, is
-    * the parallelism unit for non-splittable bz2 XML, so a directory of
-    * N exports ingests N-wide. Per-file schemas resolve by clean column
-    * name in the reader (snapshot schema evolution by name). Shared by
-    * the row scan and the pushed-COUNT scan. */
-  def plan(path: String, allSnapshots: Boolean): Array[InputPartition] = {
+    * becomes its own partition, so a directory of N exports ingests
+    * N-wide. Per-file schemas resolve by clean column name in the reader
+    * (snapshot schema evolution by name).
+    *
+    * With `splitRows`, an uncompressed file is cut into row-aligned
+    * [[FmpRanges]] of Spark's file-split size,
+    * `min(maxPartitionBytes, max(openCostInBytes, fileBytes / minPartitionNum))`,
+    * one partition each; a file at or below `openCostInBytes`, a bz2
+    * snapshot and any file [[FmpRanges]] declines stay one partition. The
+    * pushed-COUNT scan plans without `splitRows`: it emits one header
+    * count per partition. */
+  def plan(path: String, allSnapshots: Boolean, splitRows: Boolean): Array[InputPartition] = {
     val p = Paths.get(path)
     val files =
       if (allSnapshots && Files.isDirectory(p)) FmpReader.snapshots(p)
       else Seq(FmpReader.resolvePath(path))
-    files.map(f => FmpInputPartition(f.toString): InputPartition).toArray
+    files.flatMap { f =>
+      val ranges =
+        if (!splitRows || FmpReader.isBz2(f)) Nil
+        else {
+          val bytes = Files.size(f)
+          val split = splitBytes(bytes)
+          if (split >= bytes) Nil else FmpRanges(f, split)
+        }
+      if (ranges.isEmpty) Seq(FmpInputPartition(f.toString))
+      else ranges.map(r => FmpInputPartition(f.toString, Some(r)))
+    }.toArray
+  }
+
+  /** Spark's file-split size for one file of `fileBytes` bytes. */
+  private def splitBytes(fileBytes: Long): Long = {
+    val conf = SQLConf.get
+    val minPartitionNum = conf.filesMinPartitionNum
+      .orElse(conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
+      .getOrElse(org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism)
+    math.min(conf.filesMaxPartitionBytes,
+      math.max(conf.filesOpenCostInBytes, fileBytes / minPartitionNum))
   }
 }
 
@@ -236,7 +270,7 @@ class FmpCountScan(path: String, allSnapshots: Boolean) extends Scan with Batch 
   override def description(): String =
     s"FmpScan $path, PushedAggregation: [COUNT(*)] (header FOUND; rows not parsed)"
   override def planInputPartitions(): Array[InputPartition] =
-    FmpPartitions.plan(path, allSnapshots)
+    FmpPartitions.plan(path, allSnapshots, splitRows = false)
   override def createReaderFactory(): PartitionReaderFactory =
     new FmpCountReaderFactory
 }
@@ -260,13 +294,25 @@ class FmpCountReaderFactory extends PartitionReaderFactory {
     }
 }
 
-case class FmpInputPartition(resolvedPath: String) extends InputPartition
+/** One scan task's input: a whole document, or one row-aligned range of
+  * an uncompressed one. */
+case class FmpInputPartition(resolvedPath: String, range: Option[FmpRange] = None)
+    extends InputPartition {
+  def open(): InputStream = {
+    val p = Paths.get(resolvedPath)
+    range.fold(FmpReader.open(p))(_.open(p))
+  }
+
+  /** Whether this partition reports the file's header warnings: only the
+    * range that holds the first row does, so a split file warns once. */
+  def warns: Boolean = range.forall(_.first)
+}
 
 class FmpPartitionReaderFactory(allColumns: Array[String], requiredSchema: StructType,
     repeatingAsArray: Boolean, pushed: Array[Filter])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new FmpPartitionReader(partition.asInstanceOf[FmpInputPartition].resolvedPath,
+    new FmpPartitionReader(partition.asInstanceOf[FmpInputPartition],
       allColumns, requiredSchema, repeatingAsArray, pushed)
 }
 
@@ -280,11 +326,11 @@ class FmpPartitionReaderFactory(allColumns: Array[String], requiredSchema: Struc
   * the column's first value. A snapshot whose own header declared the
   * field MAXREPEAT=1 still converts fine (its one-element column becomes
   * a one-element array). */
-class FmpPartitionReader(path: String, allColumns: Array[String], requiredSchema: StructType,
-    repeatingAsArray: Boolean, pushedFilters: Array[Filter])
+class FmpPartitionReader(partition: FmpInputPartition, allColumns: Array[String],
+    requiredSchema: StructType, repeatingAsArray: Boolean, pushedFilters: Array[Filter])
     extends PartitionReader[InternalRow] {
-  private val it = new FmpReader.FmpRowIterator(FmpReader.open(Paths.get(path)),
-    repeatingAsArray = repeatingAsArray)
+  private val it = new FmpReader.FmpRowIterator(partition.open(),
+    repeatingAsArray = repeatingAsArray, warn = partition.warns)
   // Resolution of a schema column to its position in the file — a flat
   // cell index, or a `<COL>` index in array mode — is by clean name
   // against the FILE's own header. Classification of the file checks the
@@ -331,8 +377,10 @@ class FmpPartitionReader(path: String, allColumns: Array[String], requiredSchema
   // A string-typed column receiving a multi-<DATA> cell (e.g. an
   // allSnapshots read whose unified schema came from a MAXREPEAT=1
   // snapshot) keeps only the first repetition — warned once per
-  // file+column, never silently (the module contract).
-  private val warnedTruncation = scala.collection.mutable.Set.empty[Int]
+  // file+column, never silently (the module contract). Which ranges of
+  // a split file truncate depends on the data, so they share one record
+  // of what was warned, keyed by the stage that runs them.
+  private val stage = Option(TaskContext.get()).fold(-1)(_.stageId())
 
   /** Required column `i` of the row just read, in array mode. */
   private def colValue(raw: Array[String], i: Int): Any = {
@@ -343,8 +391,9 @@ class FmpPartitionReader(path: String, allColumns: Array[String], requiredSchema
       val n = it.colEnd(c) - from
       if (isArray(i)) new GenericArrayData(Array.tabulate[Any](n)(k => utf8(raw(from + k))))
       else {
-        if (n > 1 && warnedTruncation.add(i))
-          System.err.println(s"[fmp] ${Paths.get(path).getFileName}: column " +
+        if (n > 1 && FmpPartitionReader.truncationWarned.add(
+            (stage, partition.resolvedPath, requiredSchema.fieldNames(i))))
+          FmpPartitionReader.log.warn(s"${Paths.get(partition.resolvedPath).getFileName}: column " +
             s"'${requiredSchema.fieldNames(i)}' carries $n <DATA> " +
             "repetitions but the unified schema types it string; keeping the " +
             "first repetition only (re-read with repeatingAsArray inferred " +
@@ -378,4 +427,13 @@ class FmpPartitionReader(path: String, allColumns: Array[String], requiredSchema
 
   override def get(): InternalRow = current
   override def close(): Unit = it.close()
+}
+
+object FmpPartitionReader {
+  private val log = LoggerFactory.getLogger(classOf[FmpPartitionReader])
+
+  /** (stage, file, column) truncations already warned about; one entry
+    * per truncating column of a scanned file. */
+  private val truncationWarned =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, String, String)]()
 }

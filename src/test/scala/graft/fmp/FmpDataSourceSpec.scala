@@ -11,7 +11,8 @@ import graft.SparkSpec
 
 /** DataSource V2 surface: `spark.read.format("fmp")` must infer the
   * sanitized schema, stream rows executor-side, prune columns, and match
-  * the driver-parallelize reader exactly. */
+  * the driver reader exactly, whether or not it cuts a file into
+  * row-aligned ranges. */
 class FmpDataSourceSpec extends SparkSpec {
 
   private val ns = "http://www.filemaker.com/fmp/1/result"
@@ -154,8 +155,8 @@ class FmpDataSourceSpec extends SparkSpec {
   test("pushed-filter semantics equal Spark's own post-scan evaluation") {
     val path = writeFixture(30)
     val v2 = spark.read.format("fmp").load(path)
-    // Ground truth: the driver-parallelize reader, whose filters Spark
-    // itself evaluates post-scan.
+    // Ground truth: the driver reader, whose filters Spark itself
+    // evaluates post-scan.
     val v1 = FmpReader.readWithSchemaAndSha(spark, path)._1
     val predicates: Seq[org.apache.spark.sql.Column] = Seq(
       col("jaar").isNull,                        // <DATA/> rows (i % 3 == 0)
@@ -325,6 +326,185 @@ class FmpDataSourceSpec extends SparkSpec {
     assert(df.count() == 13)
     val plan = df.groupBy().count().queryExecution.executedPlan.toString
     assert(plan.contains("PushedAggregation: [COUNT(*)]"), plan)
+  }
+
+  // ---------------------------------------------------- row-aligned ranges
+
+  /** Runs `f` with Spark's file-split confs so low that a small fixture
+    * is cut into ranges of about `bytes` bytes. */
+  private def withSplitBytes[T](bytes: Long)(f: => T): T = {
+    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    spark.conf.set(keys(0), bytes.toString)
+    spark.conf.set(keys(1), "1")
+    try f finally keys.foreach(spark.conf.unset)
+  }
+
+  // Rows a byte cut could break: an escaped "<ROW>" inside a cell,
+  // multi-byte Dutch text, <ROW> tags with attributes over several lines,
+  // and a MAXREPEAT=2 column that repeats in every other row.
+  private def trickyDoc(n: Int, records: Int = -1, body: Int => String = _ => ""): String = {
+    val rows = (1 to n).map { i =>
+      val open =
+        if (i % 2 == 0) s"""<ROW\n      MODID="0"\n      RECORDID="$i">"""
+        else s"""<ROW MODID="0" RECORDID="$i">"""
+      val jaar =
+        if (i % 3 == 0) "<DATA/>"
+        else if (i % 2 == 0) s"<DATA>${1600 + i}</DATA><DATA>herdruk geëerd</DATA>"
+        else s"<DATA>${1600 + i}</DATA>"
+      s"""    $open
+         |      <COL><DATA>$i</DATA></COL>
+         |      <COL><DATA>Ĳsbrand &lt;ROW MODID="9"&gt; $i, geëerd</DATA></COL>
+         |      <COL>$jaar</COL>
+         |    </ROW>${body(i)}""".stripMargin
+    }.mkString("\n")
+    s"""<?xml version="1.0" encoding="UTF-8"?>
+       |<FMPXMLRESULT xmlns="$ns">
+       |  <ERRORCODE>0</ERRORCODE>
+       |  <DATABASE DATEFORMAT="d" LAYOUT="" NAME="Ceneton" RECORDS="${if (records < 0) n else records}" TIMEFORMAT="h"/>
+       |  <METADATA>
+       |    <FIELD EMPTYOK="YES" MAXREPEAT="1" NAME="Aantal bedr." TYPE="TEXT"/>
+       |    <FIELD EMPTYOK="YES" MAXREPEAT="1" NAME="Auteur" TYPE="TEXT"/>
+       |    <FIELD EMPTYOK="YES" MAXREPEAT="2" NAME="Jaar" TYPE="NUMBER"/>
+       |  </METADATA>
+       |  <RESULTSET FOUND="$n">
+       |$rows
+       |  </RESULTSET>
+       |</FMPXMLRESULT>
+       |""".stripMargin
+  }
+
+  private def writeBytes(name: String, bytes: Array[Byte]): String = {
+    val p = Files.createTempDirectory("fmpsplit").resolve(name)
+    Files.write(p, bytes)
+    p.toString
+  }
+
+  private def partitions(df: org.apache.spark.sql.DataFrame): Int = df.rdd.getNumPartitions
+
+  test("a pushed count(*) keeps one partition per file, so a split file counts FOUND once") {
+    val path = writeFixture(60)
+    withSplitBytes(400) {
+      assert(partitions(spark.read.format("fmp").load(path)) > 2, "the row scan is split")
+      val df = spark.read.format("fmp").load(path)
+      assert(df.count() == 60, "count(*) must equal the header FOUND, not ranges × FOUND")
+      assert(df.groupBy().count().queryExecution.executedPlan.toString
+        .contains("PushedAggregation: [COUNT(*)]"))
+      val audited = spark.read.format("fmp").option("trustHeaderCount", "false").load(path)
+      assert(audited.count() == 60, "the row-parsing count sees every row once")
+    }
+  }
+
+  test("a split read equals the whole-document read, in both modes, with filters and pruning") {
+    val xml = trickyDoc(40)
+    val bytes = xml.getBytes(StandardCharsets.UTF_8)
+    val path = writeBytes("tricky.xml", bytes)
+    val rowStart = xml.indexOf("<ROW").toLong
+    val arrays = Seq(false, true)
+    def reads(asArray: Boolean): Seq[org.apache.spark.sql.DataFrame] = {
+      val df = spark.read.format("fmp").option("repeatingAsArray", asArray).load(path)
+      Seq(df, df.filter(col("auteur").contains("1")), df.select("jaar", "aantal_bedr_"),
+        df.filter(col("aantal_bedr_").isin("2", "17", "40")).select("auteur"))
+    }
+    val whole = arrays.map(a => reads(a).map(_.collect().toSeq))
+    assert(partitions(spark.read.format("fmp").load(path)) == 1)
+    assert(whole(0)(0).size == 40 && whole(1)(0).size == 40)
+    // Put the first cut target inside a multi-byte character: the two
+    // bytes of "Ĳ" and of "ë" in the first row.
+    Seq("Ĳ", "ë").foreach { ch =>
+      val at = bytes.indexOfSlice(ch.getBytes(StandardCharsets.UTF_8).toSeq, rowStart.toInt)
+      assert(at > rowStart && at + 1 < bytes.length / 4)
+      withSplitBytes(at + 1) {
+        val cuts = graft.fmp.v2.FmpRanges(java.nio.file.Paths.get(path), at + 1)
+        assert(cuts.size > 2, s"fixture must split at $ch")
+        cuts.tail.foreach(r => assert(new String(bytes, r.start.toInt, 5, "UTF-8").matches("<ROW\\s"), r))
+        assert(cuts.map(_.end) == cuts.tail.map(_.start) :+ cuts.last.tailStart, "ranges tile the body")
+        arrays.indices.foreach { a =>
+          val split = reads(arrays(a))
+          assert(partitions(split.head) == cuts.size)
+          split.indices.foreach { q =>
+            assert(split(q).collect().toSeq == whole(a)(q),
+              s"repeatingAsArray=${arrays(a)}, read $q, cut at $ch")
+          }
+        }
+      }
+    }
+  }
+
+  test("documents the byte cut cannot prove safe stay one partition per file and read correctly") {
+    def rowsOf(path: String) = FmpReader.readWithSchemaAndSha(spark, path)._1.collect().toSeq
+    def bz2(dir: java.nio.file.Path, name: String, xml: String): Unit = {
+      val out = new BZip2CompressorOutputStream(new FileOutputStream(dir.resolve(name).toFile))
+      out.write(xml.getBytes(StandardCharsets.UTF_8)); out.close()
+    }
+    val cdata = trickyDoc(30).replace("<DATA>7</DATA>", "<DATA><![CDATA[7 <ROW MODID=\"1\">]]></DATA>")
+    val comment = trickyDoc(30, body = i => if (i == 11) "\n    <!-- <ROW MODID=\"0\"> -->" else "")
+    val utf16 = trickyDoc(30).replace("encoding=\"UTF-8\"", "encoding=\"UTF-16\"")
+    val latin1 = trickyDoc(30).replace("encoding=\"UTF-8\"", "encoding=\"ISO-8859-1\"")
+    val singles = Seq(
+      "cdata" -> writeBytes("cdata.xml", cdata.getBytes(StandardCharsets.UTF_8)),
+      "comment" -> writeBytes("comment.xml", comment.getBytes(StandardCharsets.UTF_8)),
+      "utf16" -> writeBytes("utf16.xml", utf16.getBytes(StandardCharsets.UTF_16)),
+      "latin1" -> writeBytes("latin1.xml", latin1.getBytes(StandardCharsets.ISO_8859_1)), {
+        val dir = Files.createTempDirectory("fmpsplitbz")
+        bz2(dir, "tricky.xml.bz2", trickyDoc(30))
+        "bz2" -> dir.resolve("tricky.xml.bz2").toString
+      })
+    val all = Files.createTempDirectory("fmpsplitall")
+    bz2(all, "a.xml.bz2", trickyDoc(20))
+    bz2(all, "b.xml.bz2", trickyDoc(30))
+    withSplitBytes(200) {
+      singles.foreach { case (kind, path) =>
+        val df = spark.read.format("fmp").load(path)
+        assert(partitions(df) == 1, s"$kind must not be split")
+        assert(df.collect().toSeq == rowsOf(path), kind)
+        assert(df.count() == 30, kind)
+      }
+      assert(rowsOf(singles.head._2).exists(_.getString(0) == "7 <ROW MODID=\"1\">"))
+      val snaps = spark.read.format("fmp").option("allSnapshots", "true").load(all.toString)
+      assert(partitions(snaps) == 2)
+      assert(snaps.collect().toSeq ==
+        rowsOf(all.resolve("a.xml.bz2").toString) ++ rowsOf(all.resolve("b.xml.bz2").toString))
+    }
+  }
+
+  /** Warning messages logged under `graft.fmp` while `f` runs. */
+  private def warningsDuring(f: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("fmp-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger("graft.fmp").asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try f finally { logger.removeAppender(appender); appender.stop() }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("a split file warns once per file, not once per range") {
+    // FOUND != RECORDS and a MAXREPEAT=2 field: both header warnings.
+    val path = writeBytes("warn.xml", trickyDoc(40, records = 50).getBytes(StandardCharsets.UTF_8))
+    def count(ws: Seq[String], text: String) = ws.count(_.contains(text))
+    withSplitBytes(600) {
+      val df = spark.read.format("fmp").load(path)
+      assert(partitions(df) > 2)
+      val scan = warningsDuring(df.collect())
+      assert(count(scan, "does not match number of records") == 1, scan)
+      assert(count(scan, "MAXREPEAT=2") == 1, scan)
+      // A string-typed schema over the repeating column truncates every
+      // even row; the warning comes once for the file.
+      val asString = org.apache.spark.sql.types.StructType(
+        df.schema.fields.map(_.copy(dataType = org.apache.spark.sql.types.StringType)))
+      val truncated = spark.read.format("fmp").schema(asString)
+        .option("repeatingAsArray", "true").load(path)
+      val ws = warningsDuring(truncated.collect())
+      assert(count(ws, "keeping the first repetition only") == 1, ws)
+      assert(count(ws, "does not match number of records") == 1, ws)
+    }
   }
 
   test("bz2 + directory snapshot resolution work through format(\"fmp\")") {
