@@ -1,9 +1,10 @@
 package graft.pipeline
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 
 /** Corpus-curation operators for LLM training-data pipelines — the steps
   * that sit between raw ingestion and training shards: relevance scoring
@@ -976,54 +977,57 @@ object Curation {
                 ORDER BY quality DESC NULLS LAST, doc_id) = 1 AS keep
        FROM lab ORDER BY doc_id"""
 
-  /** Min-label propagation to a fixpoint over a directed-both-ways edge
-    * list (src, dst) — the loop behind [[dedupClusters]], exposed for
-    * direct testing (CurationSpec's planted diameter-20 path graph pins
-    * the round count).
-    *
-    * Each round does TWO contractions, so rounds ≈ log2(diameter), not
-    * diameter:
-    *  1. neighbor min — lbl(u) ← min(lbl(u), min over N(u) of lbl(v)):
-    *     one equi-join on node id + a partial-agg min (the classic
-    *     propagation step; alone it needs diameter rounds);
-    *  2. pointer doubling — lbl(u) ← min(lbl(u), lbl(lbl(u))): one more
-    *     equi-join that shortcuts label chains the way large-star/
-    *     small-star (Kiveris et al., "Connected Components in MapReduce",
-    *     SoCC'14) does, without that algorithm's edge-rewriting — labels
-    *     only ever move within their component and only decrease, so the
-    *     fixpoint (every node labelled with its component minimum, the
-    *     recursive-CTE oracle's answer) is unchanged; only the round
-    *     count drops. Near-dup graphs are shallow (diameter 2-4) so this
-    *     is insurance for adversarial chain shapes, not the common case.
-    *
-    * Convergence is detected by a changed-row COUNT (an aggregate, never
-    * a collect); non-convergence throws — truncated propagation would
-    * silently split one component into several clusters. MaxRounds=100
-    * therefore bounds diameter 2^100, i.e. it only fires on a structural
-    * bug, not on any real input. All loop caches are released on EVERY
-    * exit path (try/finally); the returned frame is localCheckpoint-ed so
-    * its lineage does not pin the unpersisted loop state. */
-  /** Contracted-edge budget under which component resolution finishes
-    * as a bounded DRIVER union-find instead of the distributed loop —
-    * the broadcast-join economics applied to the propagation tail: a
-    * loop round costs 4-5 shuffles + a checkpoint + a count action
-    * REGARDLESS of size (measured ~0.7-0.9 s/round on a 1k-edge media
-    * graph — pure fixed cost), while 2M (src, dst) longs are ~32 MB of
-    * payload (~200 MB transient as collected Rows) on a driver sized
-    * like this library's own 8 GB default — the same order as broadcast
-    * relations it already tolerates. Raised from 200k in r19: even the
+  /** Edge budget under which a graph kernel ([[propagateMinLabels]],
+    * [[pagerankFrame]]) finishes on the DRIVER instead of as a
+    * distributed plan — the broadcast-join economics applied to
+    * iterative graph work. A distributed round costs the same fixed
+    * amount REGARDLESS of size: a propagation round is 4-5 shuffles + a
+    * checkpoint + a count action (~0.7-0.9 s/round measured on a
+    * 1k-edge media graph); an unrolled PageRank iteration is two joins +
+    * one aggregation whose per-task cost scales with
+    * `shuffle.partitions` (the r18 scaling block measured x60/x60b 3×
+    * FASTER on 8 cores than on 32 at sf0.1). Against that, 2M
+    * (src, dst) longs are ~32 MB of payload (~200 MB transient as
+    * collected Rows) on a driver sized like this library's own 8 GB
+    * default — the same order as broadcast relations it already
+    * tolerates. Raised from 200k in r19: even the propagation
     * contraction pre-pass costs ~2-3 s of fixed shuffle/checkpoint
     * actions on a clique-saturated 1.8M-edge graph whose union-find
-    * resolves driver-side in well under a second; the 100 TB fallback
-    * (contract, then loop) is unchanged for graphs past the budget.
-    * The dispatch reads the size of the CONTRACTED edge set (already
-    * checkpointed, so the count is a local block scan): near-dup
-    * graphs contract by orders of magnitude, so bench-scale graphs all
-    * take the driver path, while a 100 TB corpus whose contracted
-    * graph still exceeds the budget keeps the scale-correct loop —
-    * same cost-model-dispatch pattern as x29/x46c, equivalence
-    * spec-pinned on both branches (CurationSpec). */
-  private[graft] val PropagateDriverEdgeBudget = 2000000L
+    * resolves driver-side in well under a second. Graphs past the
+    * budget keep the scale-correct distributed plan; both branches of
+    * each kernel are bit-identical (CurationSpec pins them on planted
+    * graphs, forcing the distributed one with a budget of 0). */
+  private[graft] val DriverEdgeBudget = 2000000L
+
+  /** Every (src, dst) edge on the driver, or None when the frame holds
+    * more than `budget` rows (or `budget` is no positive Int). ONE
+    * LIMIT-probe job: CollectLimit short-circuits, so on a big graph it
+    * reads ~one partition and the caller falls through, while on a small
+    * one it already holds every edge. Callers probe a persisted or
+    * checkpointed frame, so the distributed fallback reuses what the
+    * probe materialized. */
+  private def probeEdges(edges: DataFrame,
+      budget: Long): Option[Array[(Long, Long)]] =
+    if (budget <= 0 || budget >= Int.MaxValue.toLong) None
+    else {
+      val probe = edges.select(col("src"), col("dst"))
+        .limit(budget.toInt + 1).collect()
+      if (probe.length <= budget) Some(edgePairs(probe)) else None
+    }
+
+  /** Integral-id (src, dst) rows as driver pairs. */
+  private def edgePairs(rows: Array[Row]): Array[(Long, Long)] =
+    rows.map(r => (r.get(0).asInstanceOf[Number].longValue,
+      r.get(1).asInstanceOf[Number].longValue))
+
+  /** Driver rows as a DataFrame over a local relation — exact stats, so
+    * it broadcasts, and no RDD hop. */
+  private def localFrame(spark: SparkSession, rows: Seq[Row],
+      cols: (String, DataType)*): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava,
+      StructType(cols.map { case (n, t) => StructField(n, t) }))
+  }
 
   /** Resolve min-label components of a ≤budget edge list driver-side:
     * path-compressed union-find, then per-component minimum — exactly
@@ -1051,9 +1055,52 @@ object Curation {
     out
   }
 
+  /** The union-find labels of a driver-held edge list as a local
+    * (nodeCol, lblCol) frame, typed like the edge ids (BIGINT or INT). */
+  private def labelFrame(spark: SparkSession, edges: Array[(Long, Long)],
+      idType: DataType, nodeCol: String, lblCol: String): DataFrame = {
+    val asId: Long => Any =
+      if (idType == LongType) (v: Long) => v else (v: Long) => v.toInt
+    localFrame(spark,
+      unionFindMinLabels(edges).toSeq.map { case (n, l) => Row(asId(n), asId(l)) },
+      nodeCol -> idType, lblCol -> idType)
+  }
+
+  /** Min-label propagation to a fixpoint over a directed-both-ways edge
+    * list (src, dst) — the loop behind [[dedupClusters]], exposed for
+    * direct testing (CurationSpec's planted diameter-20 path graph pins
+    * the round count).
+    *
+    * Each round does TWO contractions, so rounds ≈ log2(diameter), not
+    * diameter:
+    *  1. neighbor min — lbl(u) ← min(lbl(u), min over N(u) of lbl(v)):
+    *     one equi-join on node id + a partial-agg min (the classic
+    *     propagation step; alone it needs diameter rounds);
+    *  2. pointer doubling — lbl(u) ← min(lbl(u), lbl(lbl(u))): one more
+    *     equi-join that shortcuts label chains the way large-star/
+    *     small-star (Kiveris et al., "Connected Components in MapReduce",
+    *     SoCC'14) does, without that algorithm's edge-rewriting — labels
+    *     only ever move within their component and only decrease, so the
+    *     fixpoint (every node labelled with its component minimum, the
+    *     recursive-CTE oracle's answer) is unchanged; only the round
+    *     count drops. Near-dup graphs are shallow (diameter 2-4) so this
+    *     is insurance for adversarial chain shapes, not the common case.
+    *
+    * Graphs within [[DriverEdgeBudget]] (integral ids only — every
+    * production graph keys on BIGINT doc/vec/media ids) skip the loop:
+    * the whole edge list, or else the contracted one, resolves by
+    * driver union-find ([[labelFrame]]), returning 1 round.
+    *
+    * Convergence is detected by a changed-row COUNT (an aggregate, never
+    * a collect); non-convergence throws — truncated propagation would
+    * silently split one component into several clusters. MaxRounds=100
+    * therefore bounds diameter 2^100, i.e. it only fires on a structural
+    * bug, not on any real input. All loop caches are released on EVERY
+    * exit path (try/finally); the returned frame is localCheckpoint-ed so
+    * its lineage does not pin the unpersisted loop state. */
   private[graft] def propagateMinLabels(
       edgeList: DataFrame, maxRounds: Int = 100,
-      driverEdgeBudget: Long = PropagateDriverEdgeBudget): (DataFrame, Int) = {
+      driverEdgeBudget: Long = DriverEdgeBudget): (DataFrame, Int) = {
     // Every persisted frame registers in `live`; the finally block sweeps
     // whatever is still cached, so NO exit path — happy, non-convergence
     // throw, or a failed mid-round action — leaks caches into the shared
@@ -1061,118 +1108,76 @@ object Curation {
     val live = scala.collection.mutable.Set.empty[DataFrame]
     def cache(df: DataFrame): DataFrame = { df.persist(); live += df; df }
     def release(df: DataFrame): Unit = { df.unpersist(); live -= df }
-    val srcType0 = edgeList.schema("src").dataType
-    val integralIds0 = srcType0 == org.apache.spark.sql.types.LongType ||
-      srcType0 == org.apache.spark.sql.types.IntegerType
-    // Fast front door: a LIMIT-probe collect. If the WHOLE edge list
-    // fits the driver budget the probe already holds every edge after
-    // ONE job (CollectLimit short-circuits, so on a big graph this
-    // reads ~one partition and falls through), and the result is a
-    // LocalRelation — exact stats, broadcastable, no checkpoint, no
-    // loop, no contraction pass at all. Small pair graphs (media
-    // clusters, slice queries) previously paid 4-6 fixed-cost actions
-    // here; now they pay one collect + a local union-find.
-    // The probe runs over the PERSISTED frame registered in `live`:
-    // partitions it materializes are cached and the over-budget path's
-    // full pass below reuses them (and the upstream shuffle files), so
-    // a big expensive edge pipeline never pays the probe twice —
-    // unpersisted, the probe's partial evaluation of the x46 lex pair
-    // pipeline cost it ~3 s per call.
-    val edgesFull = cache(edgeList)
-    if (integralIds0 && driverEdgeBudget > 0 &&
-        driverEdgeBudget < Int.MaxValue.toLong) {
-      val probe = edgesFull.select(col("src"), col("dst"))
-        .limit(driverEdgeBudget.toInt + 1).collect()
-      if (probe.length <= driverEdgeBudget) {
-        try {
-          val lbl = unionFindMinLabels(probe.map(r =>
-            (r.get(0).asInstanceOf[Number].longValue,
-              r.get(1).asInstanceOf[Number].longValue)))
-          val spark = edgeList.sparkSession
-          val asId: Long => Any =
-            if (srcType0 == org.apache.spark.sql.types.LongType) (v: Long) => v
-            else (v: Long) => v.toInt
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", srcType0),
-            org.apache.spark.sql.types.StructField("lbl", srcType0)))
-          val rows = new java.util.ArrayList[org.apache.spark.sql.Row](lbl.size)
-          lbl.foreach { case (n, l) =>
-            rows.add(org.apache.spark.sql.Row(asId(n), asId(l))) }
-          return (spark.createDataFrame(rows, schema), 1)
-        } finally live.foreach(_.unpersist())
-      }
-    }
-    // Contraction pre-pass (counted as round 1): lbl0(u) = min(u, N(u))
-    // needs NO join at all — the initial label of every node is itself,
-    // so the first neighbor-min round is a single partial aggregation
-    // over the edge list. The loop below then runs on the CONTRACTED
-    // graph (endpoints relabeled by lbl0, self-loops dropped, dups
-    // merged): on near-dup graphs — dense cliques by construction — one
-    // round collapses each clique to its minimum, so the contracted
-    // edge set is orders of magnitude smaller than the input and every
-    // subsequent round pays |contracted|, not |edges| (the x46 lex
-    // graph at sf0.1: 1.79M directed edges, 4 loop rounds each
-    // re-joining all of them; contracted: ~0 edges).
-    // Losslessness: u and lbl0(u) are endpoints of an edge (or equal),
-    // so relabeling merges only nodes already in one component —
-    // components of the contracted graph are exactly the input's
-    // components under the lbl0 mapping; composing the loop's fixpoint
-    // with lbl0 (both only ever decrease toward the component minimum)
-    // yields the same per-node component minimum the recursive-CTE
-    // oracle computes (CurationSpec pins the planted diameter-20 chain
-    // and the clique mixes).
-    val l0 = cache(edgesFull.groupBy("src")
-      .agg(min(col("dst")).as("nmin"))
-      .select(col("src").as("node"), least(col("src"), col("nmin")).as("lbl")))
-    val edges = cache(
-      edgesFull.join(l0.select(col("node").as("sn"), col("lbl").as("sl")),
-          col("src") === col("sn"))
-        .join(l0.select(col("node").as("dn"), col("lbl").as("dl")),
-          col("dst") === col("dn"))
-        .filter(col("sl") =!= col("dl"))
-        .select(col("sl").as("src"), col("dl").as("dst"))
-        .distinct()
-        .transform(Checkpoints.stablePinned))
-    release(edgesFull)
-    // Cost-based dispatch on the CONTRACTED edge count (a local scan of
-    // the checkpoint blocks just written — no extra distributed work):
-    // under the budget, finish driver-side; see
-    // [[PropagateDriverEdgeBudget]]. Only integral id types take the
-    // driver path (every production graph keys on BIGINT doc/vec/media
-    // ids); anything else falls through to the loop unchanged.
-    val srcType = edges.schema("src").dataType
-    val integralIds = srcType == org.apache.spark.sql.types.LongType ||
-      srcType == org.apache.spark.sql.types.IntegerType
-    if (integralIds && edges.count() <= driverEdgeBudget) {
-      try {
-        val arr = edges.collect().map(r =>
-          (r.get(0).asInstanceOf[Number].longValue,
-            r.get(1).asInstanceOf[Number].longValue))
-        val lbl = unionFindMinLabels(arr)
-        val spark = edgeList.sparkSession
-        val asId: Long => Any =
-          if (srcType == org.apache.spark.sql.types.LongType) (v: Long) => v
-          else (v: Long) => v.toInt
-        val rows = lbl.toSeq.map { case (n, l) =>
-          org.apache.spark.sql.Row(asId(n), asId(l)) }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("cn", srcType),
-          org.apache.spark.sql.types.StructField("clbl", srcType)))
-        val contractedLbl = spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toSeq, 1), schema)
-        val composed = l0
-          .join(contractedLbl, col("lbl") === col("cn"), "left")
-          .select(col("node"), coalesce(col("clbl"), col("lbl")).as("lbl"))
-          .transform(Checkpoints.stablePinned)
-        // One genuine neighbor-min round (the pre-pass) happened.
-        return (composed, 1)
-      } finally live.foreach(_.unpersist())
-    }
-    var labels = cache(edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")))
-    var converged = false
-    var rounds = 0
+    val spark = edgeList.sparkSession
+    val idType = edgeList.schema("src").dataType
+    val integralIds = idType == LongType || idType == IntegerType
     try {
+      // Fast front door: if the WHOLE edge list fits the budget, one
+      // probe job + a local union-find replace the 4-6 fixed-cost
+      // actions of the contraction pass and the loop on small pair
+      // graphs (media clusters, slice queries). The probe runs over
+      // the PERSISTED frame registered in `live`: the over-budget path's
+      // full pass below reuses the partitions it materialized (and the
+      // upstream shuffle files), so a big expensive edge pipeline never
+      // pays the probe twice — unpersisted, the probe's partial
+      // evaluation of the x46 lex pair pipeline cost it ~3 s per call.
+      val edgesFull = cache(edgeList)
+      if (integralIds) probeEdges(edgesFull, driverEdgeBudget) match {
+        case Some(all) => return (labelFrame(spark, all, idType, "node", "lbl"), 1)
+        case None =>
+      }
+      // Contraction pre-pass (counted as round 1): lbl0(u) = min(u, N(u))
+      // needs NO join at all — the initial label of every node is itself,
+      // so the first neighbor-min round is a single partial aggregation
+      // over the edge list. The loop below then runs on the CONTRACTED
+      // graph (endpoints relabeled by lbl0, self-loops dropped, dups
+      // merged): on near-dup graphs — dense cliques by construction — one
+      // round collapses each clique to its minimum, so the contracted
+      // edge set is orders of magnitude smaller than the input and every
+      // subsequent round pays |contracted|, not |edges| (the x46 lex
+      // graph at sf0.1: 1.79M directed edges, 4 loop rounds each
+      // re-joining all of them; contracted: ~0 edges).
+      // Losslessness: u and lbl0(u) are endpoints of an edge (or equal),
+      // so relabeling merges only nodes already in one component —
+      // components of the contracted graph are exactly the input's
+      // components under the lbl0 mapping; composing the loop's fixpoint
+      // with lbl0 (both only ever decrease toward the component minimum)
+      // yields the same per-node component minimum the recursive-CTE
+      // oracle computes (CurationSpec pins the planted diameter-20 chain
+      // and the clique mixes).
+      val l0 = cache(edgesFull.groupBy("src")
+        .agg(min(col("dst")).as("nmin"))
+        .select(col("src").as("node"), least(col("src"), col("nmin")).as("lbl")))
+      val edges = cache(
+        edgesFull.join(l0.select(col("node").as("sn"), col("lbl").as("sl")),
+            col("src") === col("sn"))
+          .join(l0.select(col("node").as("dn"), col("lbl").as("dl")),
+            col("dst") === col("dn"))
+          .filter(col("sl") =!= col("dl"))
+          .select(col("sl").as("src"), col("dl").as("dst"))
+          .distinct()
+          .transform(Checkpoints.stablePinned))
+      release(edgesFull)
+      // Compose the contracted fixpoint (cn → clbl) back through the
+      // pre-pass map: final(u) = clbl(lbl0(u)), falling back to lbl0(u)
+      // for nodes whose whole component collapsed in the pre-pass (their
+      // label never entered the contracted graph). Checkpointed so the
+      // returned frame does not pin the caches swept below.
+      def compose(contracted: DataFrame): DataFrame = l0
+        .join(contracted, col("lbl") === col("cn"), "left")
+        .select(col("node"), coalesce(col("clbl"), col("lbl")).as("lbl"))
+        .transform(Checkpoints.stablePinned)
+      // Dispatch on the CONTRACTED edge count — a local scan of the
+      // checkpoint blocks just written, where a LIMIT probe would ship up
+      // to budget+1 rows for every graph past the budget. Under it, the
+      // one genuine neighbor-min round (the pre-pass) is all that ran.
+      if (integralIds && edges.count() <= driverEdgeBudget)
+        return (compose(labelFrame(spark, edgePairs(edges.collect()), idType,
+          "cn", "clbl")), 1)
+      var labels = cache(edges.select(col("src").as("node")).distinct()
+        .withColumn("lbl", col("node")))
+      var converged = false
+      var rounds = 0
       while (!converged && rounds < maxRounds) {
         // 1. neighbor min (left join: isolated self-loops keep their label).
         // Persisted within the round: it feeds both sides of the doubling
@@ -1221,19 +1226,9 @@ object Curation {
       }
       if (!converged) throw new IllegalStateException(
         s"propagateMinLabels: did not converge in $maxRounds rounds")
-      // Compose the contracted fixpoint back through the pre-pass map:
-      // final(u) = loop(lbl0(u)), falling back to lbl0(u) for nodes whose
-      // whole component collapsed in the pre-pass (their label never
-      // entered the contracted graph). Checkpointed so the returned
-      // frame does not pin the loop caches swept below (the contract
-      // this function always had).
-      val composed = l0
-        .join(labels.select(col("node").as("cn"), col("lbl").as("clbl")),
-          col("lbl") === col("cn"), "left")
-        .select(col("node"), coalesce(col("clbl"), col("lbl")).as("lbl"))
-        .transform(Checkpoints.stablePinned)
       // The pre-pass is a genuine neighbor-min round: count it.
-      (composed, rounds + 1)
+      (compose(labels.select(col("node").as("cn"), col("lbl").as("clbl"))),
+        rounds + 1)
     } finally live.foreach(_.unpersist())
   }
 
@@ -2102,41 +2097,21 @@ object Curation {
       Checkpoints.stable(undirectedEdges(pairs.toDF("da", "db"))), iters)
       .orderBy("doc_id")
 
-  /** Edge budget under which the unrolled rank iterations run as bounded
-    * DRIVER arithmetic instead of the composed 5-iteration join/agg plan
-    * — the [[PropagateDriverEdgeBudget]] economics applied to PageRank:
-    * each unrolled iteration costs two joins + one aggregation whose
-    * per-task fixed cost scales with `shuffle.partitions` regardless of
-    * data (the r18 scaling block measured x60/x60b running 3× FASTER on
-    * 8 cores than 32 at sf0.1 — pure per-round fixed cost), while 2M
-    * (src, dst) longs are ~32 MB on the driver (the
-    * [[PropagateDriverEdgeBudget]] sizing rationale). Rank mass is integer
-    * millionths with floor-division contributions (aggregation-order-
-    * free), so the driver loop is BIT-IDENTICAL to the distributed one
-    * (CurationSpec pins both branches on planted graphs); a 100 TB graph
-    * whose edge list exceeds the budget keeps the scale-correct plan. */
-  private[graft] val PagerankDriverEdgeBudget = 2000000L
-
   /** `edges` must be the symmetric (src, dst) list — [[undirectedEdges]]
     * output, pre-checkpointed by the caller so several consumers (rank +
-    * label propagation) share ONE materialization of the pair subtree. */
+    * label propagation) share ONE materialization of the pair subtree.
+    * Within [[DriverEdgeBudget]] (BIGINT ids only) the unrolled
+    * iterations run as driver arithmetic. Rank mass is integer
+    * millionths with floor-division contributions (aggregation-order-
+    * free), so that loop is BIT-IDENTICAL to the distributed plan. */
   private[graft] def pagerankFrame(nodes: DataFrame, edges: DataFrame,
       iters: Int,
-      driverEdgeBudget: Long = PagerankDriverEdgeBudget): DataFrame = {
-    val longIds =
-      edges.schema("src").dataType == org.apache.spark.sql.types.LongType &&
-        nodes.schema("doc_id").dataType == org.apache.spark.sql.types.LongType
-    // LIMIT-probe the PERSISTED/CHECKPOINTED edge frame (the propagation
-    // front-door discipline): on a small graph the probe already holds
-    // every edge after one job; on a big one CollectLimit short-circuits
-    // after ~one partition and the loop below runs unchanged.
-    if (longIds && iters >= 1 && driverEdgeBudget > 0 &&
-        driverEdgeBudget < Int.MaxValue.toLong) {
-      val probe = edges.select(col("src"), col("dst"))
-        .limit(driverEdgeBudget.toInt + 1).collect()
-      if (probe.length <= driverEdgeBudget) {
+      driverEdgeBudget: Long = DriverEdgeBudget): DataFrame = {
+    val longIds = edges.schema("src").dataType == LongType &&
+      nodes.schema("doc_id").dataType == LongType
+    if (longIds && iters >= 1) probeEdges(edges, driverEdgeBudget) match {
+      case Some(edgeArr) =>
         val spark = nodes.sparkSession
-        val edgeArr = probe.map(r => (r.getLong(0), r.getLong(1)))
         // Rank state exists only for nodes of the `nodes` frame (the
         // distributed contrib join drops foreign srcs); restrict the
         // driver state to endpoints ∩ nodes via one bounded semi-join
@@ -2147,12 +2122,7 @@ object Curation {
         // corpus slice while the graph is tiny).
         val eps = edgeArr.iterator.flatMap(e => Iterator(e._1, e._2))
           .toArray.distinct
-        val epsDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            eps.toSeq.map(org.apache.spark.sql.Row(_)), 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("ep",
-              org.apache.spark.sql.types.LongType))))
+        val epsDf = localFrame(spark, eps.toSeq.map(Row(_)), "ep" -> LongType)
         val inNodes = nodes.select(col("doc_id"))
           .join(broadcast(epsDf), col("doc_id") === col("ep"), "left_semi")
           .collect().map(_.getLong(0))
@@ -2172,23 +2142,15 @@ object Curation {
           inNodes.foreach(n => next(n) = 150000L + cin.getOrElse(n, 0L))
           r = next
         }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("r",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("deg",
-            org.apache.spark.sql.types.LongType)))
-        val rows = new java.util.ArrayList[org.apache.spark.sql.Row](inNodes.length)
-        inNodes.foreach { n =>
-          rows.add(org.apache.spark.sql.Row(n, r(n), deg.getOrElse(n, 0L))) }
-        val local = spark.createDataFrame(rows, schema)
+        val local = localFrame(spark,
+          inNodes.toSeq.map(n => Row(n, r(n), deg.getOrElse(n, 0L))),
+          "node" -> LongType, "r" -> LongType, "deg" -> LongType)
         return nodes.select(col("doc_id"))
           .join(broadcast(local), col("doc_id") === col("node"), "left")
           .select(col("doc_id"),
             coalesce(col("r"), lit(150000L)).as("rank_mass"),
             coalesce(col("deg"), lit(0L)).as("n_out"))
-      }
+      case None =>
     }
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val n = nodes.select(col("doc_id").as("node"))

@@ -68,11 +68,11 @@ object Sinks {
 
   /** Header-mapping CSV (`dump_headers`, _cli.py:38-53): two columns,
     * original_name,clean_name, one row per field in schema order. Built
-    * from the DataFrame schema + `comment` metadata — no job runs. */
+    * from the DataFrame schema + `comment` metadata as a local relation —
+    * no job runs. */
   def headersDf(spark: SparkSession, df: DataFrame): DataFrame = {
     val rows = df.schema.fields.map(f => Row(originalName(f).getOrElse(f.name), f.name))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1),
+    spark.createDataFrame(rows.toSeq.asJava,
       StructType(Seq(
         StructField("original_name", StringType, nullable = false),
         StructField("clean_name", StringType, nullable = false))))

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * from `SparkEntry` makes the doc physically unable to drift: any new
   * QueryDef fails this spec until the preamble is updated. The same
   * holds for the one session factory: a new `SparkSession.builder` in
-  * main code fails here, and for the one hardened XML factory. */
+  * main code fails here, as does a second XML factory or a
+  * `parallelize` of driver rows. */
 class DocsSpec extends AnyFunSuite {
 
   private val operatorsMd = {
@@ -72,5 +73,13 @@ class DocsSpec extends AnyFunSuite {
     val factories = mainFilesUsing("XMLInputFactory")
     assert(factories == Seq("src/main/scala/graft/fmp/FmpReader.scala"),
       s"XMLInputFactory outside FmpReader: $factories")
+  }
+
+  test("main code hands driver rows to Spark as local relations, never through parallelize") {
+    // spark.createDataFrame(java.util.List[Row], schema) plans a
+    // LocalRelation: exact stats, broadcastable, rows encoded once. An
+    // RDD of Rows has none of that and ships Java-serialized rows.
+    val users = mainFilesUsing(".parallelize(")
+    assert(users.isEmpty, s"parallelize in main code: $users")
   }
 }

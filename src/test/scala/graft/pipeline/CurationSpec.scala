@@ -529,6 +529,17 @@ class CurationSpec extends SparkSpec {
       s"dispatch branches disagree:\ndriver=$viaDriver\nloop=$viaLoop")
     assert(viaDriver((1L to 13L).filter(viaDriver.contains).max) == 1L,
       "bridged cliques form one component labelled by the global min")
+    // The post-contraction driver branch: a budget under the 80 directed
+    // edges skips the front door, and one at or above the 46 contracted
+    // edges resolves them by driver union-find after the pre-pass. That
+    // branch reports 1 round; the loop reports at least 2.
+    val (afterContraction, rounds) =
+      Curation.propagateMinLabels(edges, driverEdgeBudget = 60L)
+    assert(rounds == 1, s"post-contraction driver branch not taken: $rounds rounds")
+    val viaContracted =
+      afterContraction.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(viaContracted == viaLoop,
+      s"post-contraction branch disagrees:\ncontracted=$viaContracted\nloop=$viaLoop")
   }
 
   test("pagerank driver dispatch is bit-equal to the distributed iteration plan") {
